@@ -166,28 +166,6 @@ SIMPLE_TOKENS_DUCKDB = (
 )
 
 
-def char_ngrams_udf(n: int):
-    """Char n-gram analyzer (reference: evaluator/NGramAnalyzer.java:23-37):
-    lowercase, fixed-length n-grams over the raw string."""
-
-    @F.pandas_udf(T.ArrayType(T.StringType()))
-    def _ngrams(texts: pd.Series) -> pd.Series:
-        def grams(s: str) -> list[str]:
-            s = (s or "").lower()
-            return [s[i : i + n] for i in range(len(s) - n + 1)]
-
-        return texts.map(grams)
-
-    return _ngrams
-
-
 def char_ngrams(text: str, n: int) -> list[str]:
     s = (text or "").lower()
     return [s[i : i + n] for i in range(len(s) - n + 1)]
-
-
-def html_strip(col: Column | str) -> Column:
-    """Strip markup tags (reference: TrecDocIndexer.java:380-382 uses an
-    HTML parser's text()); JVM-side regex approximation."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.regexp_replace(c, "<[^>]*>", " ")

@@ -16,7 +16,6 @@ import math
 from collections import Counter
 
 import pandas as pd
-from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -251,11 +250,3 @@ def rcd_reference_eval(pred_rel: dict, equiv_groups: list[list[str]]):
         w = np.float32(np.float32(n) / n_sum)
         wavg += w * avg
     return wavg
-
-
-# ---- JVM-side variants for set similarities over token array columns
-
-def jaccard_col(a: Column, b: Column) -> Column:
-    inter = F.size(F.array_intersect(a, b)).cast("double")
-    union = F.size(F.array_union(a, b)).cast("double")
-    return F.when(union > 0, inter / union).otherwise(F.lit(0.0))

@@ -18,6 +18,7 @@ Norms are precomputed per row so the scan projects (id, vec, norm) once.
 from __future__ import annotations
 
 import math
+import sys
 
 import numpy as np
 from pyspark.sql import DataFrame, Window
@@ -88,9 +89,11 @@ def quantize_embeddings(
     scale double)."""
     v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
     ma = F.array_max(F.transform(v, lambda x: F.abs(x)))
-    scale = (
-        F.when(ma == 0.0, F.lit(1.0)).otherwise(ma) / F.lit(127.0)
-    )
+    raw = F.when(ma == 0.0, F.lit(1.0)).otherwise(ma) / F.lit(127.0)
+    # a subnormal scale (max|x| < 127 * smallest normal double) is too
+    # coarse to keep |q| <= 127, or underflows to 0 and divides by zero
+    tiny = F.lit(sys.float_info.min)
+    scale = F.when(raw < tiny, tiny).otherwise(raw)
     out = df.select(
         F.col(id_col).alias("vec_id"), v.alias("_v"), scale.alias("scale")
     )

@@ -4,13 +4,18 @@ Replaces the reference's serial indexing loop (reference:
 indexing/TrecDocIndexer.java:151-168 — one thread feeding a Lucene
 IndexWriter doc by doc) with a distributed build:
 
-    documents ──analyze (Arrow UDF / codegen'd split)──▶ (doc_id, tokens)
-       ├──▶ doc_stats  (doc_len, sha256, broadcastable scalars N/avgdl)
-       └──▶ explode ──▶ hash-agg (doc_id, term) -> tf     [map-side partial]
-                 └──▶ shuffle by term  == Lucene's segment merge
-                        ├──▶ term_stats (df, cf)
-                        └──▶ per-(term, salt) sorted, delta+varbyte-encoded
-                             posting blobs with per-block max-tf impacts
+    documents ──derive_postings──▶ (term, doc_id, tf, doc_len)
+       │    simple: codegen'd split ──▶ explode ──▶ map-side partial agg
+       │    others: one Arrow kernel analyzes AND counts tf per doc
+       ├──▶ derive_doc_stats (doc_len out of the postings, sha256)
+       └──▶ shuffle by term  == Lucene's segment merge
+              ├──▶ term_stats (df, cf)
+              └──▶ per-(term, salt) sorted, delta+varbyte-encoded
+                   posting blobs with per-block max-tf impacts
+
+Every build — in-session (``build_index``), checkpointed
+(plans/checkpoints.py) and streamed (streaming/incremental_index.py) —
+gets its postings and doc_stats from those two functions.
 
 The only cluster-wide data movement is the shuffle by term; skewed
 high-df terms (code corpora: 'the', 'license', 'import'...) are salted
@@ -149,25 +154,6 @@ def assign_doc_ids(
     )
 
 
-def build_doc_stats(
-    docs: DataFrame,
-    tokens: DataFrame,
-    id_col: str = "doc_id",
-    content_col: str = "content",
-) -> DataFrame:
-    """doc_id, doc_len (post-stop token count — Lucene-norm analogue,
-    exact int64 instead of the 1-byte lossy SmallFloat), content_sha256
-    (the per-row ingest invariant)."""
-    lens = tokens.select(
-        "doc_id", F.size("tokens").cast("long").alias("doc_len")
-    )
-    shas = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.sha2(F.col(content_col), 256).alias("content_sha256"),
-    )
-    return lens.join(shas, "doc_id")
-
-
 def build_flat_postings(tokens: DataFrame) -> DataFrame:
     """(doc_id, tokens) -> (term, doc_id, tf, doc_len).
 
@@ -226,6 +212,46 @@ def extract_postings_arrow(
 
     return docs.select(id_col, content_col).mapInPandas(
         extract, "term string, doc_id long, tf int, doc_len long"
+    )
+
+
+def derive_postings(
+    docs: DataFrame,
+    cfg: AnalyzerConfig,
+    id_col: str = "doc_id",
+    content_col: str = "content",
+) -> DataFrame:
+    """documents -> flat postings (term, doc_id, tf, doc_len): the one
+    postings derivation every index build uses. ``simple`` mode stays on
+    the pure-JVM tokenizer (explode + codegen'd partial agg); every
+    Arrow-analyzed mode extracts tf inside the UDF
+    (``extract_postings_arrow`` — avoids the JVM token-explode)."""
+    if cfg.mode == "simple":
+        return build_flat_postings(tokenize(docs, cfg, id_col, content_col))
+    return extract_postings_arrow(docs, cfg, id_col, content_col)
+
+
+def derive_doc_stats(
+    docs: DataFrame,
+    postings: DataFrame,
+    id_col: str = "doc_id",
+    content_col: str = "content",
+) -> DataFrame:
+    """documents + their flat postings -> (doc_id, doc_len,
+    content_sha256). doc_len is the post-stop token count (Lucene-norm
+    analogue, exact int64 instead of the 1-byte lossy SmallFloat), read
+    back out of the postings (constant per doc_id); the left join keeps
+    zero-token docs with doc_len 0. content_sha256 is the per-row ingest
+    invariant, so docs are re-scanned only for the sha projection."""
+    lens = postings.groupBy("doc_id").agg(F.max("doc_len").alias("doc_len"))
+    return (
+        docs.select(
+            F.col(id_col).alias("doc_id"),
+            F.sha2(F.col(content_col), 256).alias("content_sha256"),
+        )
+        .join(lens, "doc_id", "left")
+        .withColumn("doc_len", F.coalesce(F.col("doc_len"), F.lit(0)))
+        .select("doc_id", "doc_len", "content_sha256")
     )
 
 
@@ -381,47 +407,29 @@ def build_index(
     cfg: IndexConfig | None = None,
     id_col: str = "doc_id",
     content_col: str = "content",
-    compress: bool = False,
     cache: bool = True,
 ) -> InvertedIndex:
-    """End-to-end index build. With ``compress=True`` also materializes
-    the delta+varbyte blob table (see operators/wand.py for the reader).
+    """End-to-end, in-session index build. The compressed blob table is
+    left to its reader (operators/wand.py builds it on first use).
 
-    Memory shape: tokenization runs exactly ONCE (its output feeds the
-    postings aggregation directly and is never cached — persisting the
-    raw token arrays evicts everything else and thrashes at high
-    parallelism); only the compact flat-postings table is persisted.
-    doc_len is derived back out of the postings (it rides the groupBy
-    key), so docs are re-scanned only for the cheap sha projection.
+    Memory shape: analysis runs exactly ONCE, inside
+    ``derive_postings`` (raw token arrays are never cached — persisting
+    them evicts everything else and thrashes at high parallelism); only
+    the compact flat-postings table is persisted. doc_stats is derived
+    lazily from the postings (``derive_doc_stats``), so docs are
+    re-scanned only for the cheap sha projection.
 
     ``docs`` should be cheap to count (a file source — parquet counts
     from footer metadata — or an already-persisted frame): the stats
-    derivation issues one docs.count(). Expensively-derived corpora
-    (tar.gz parse lineages) go through build_index_checkpointed, which
-    materializes the parse once."""
+    derivation issues one docs.count(). Builds that must survive a
+    restart go through build_index_checkpointed, which writes the same
+    tables to disk stage by stage (it scans docs again for its lineage
+    fingerprint and for the sha projection)."""
     cfg = cfg or IndexConfig()
-    if cfg.analyzer.mode == "simple":
-        # pure-JVM tokenizer: explode + codegen'd partial agg
-        toks = tokenize(docs, cfg.analyzer, id_col, content_col)
-        flat = build_flat_postings(toks)
-    else:
-        # Arrow-analyzed modes: tf extraction inside the UDF (see
-        # extract_postings_arrow — avoids the JVM token-explode)
-        flat = extract_postings_arrow(docs, cfg.analyzer, id_col, content_col)
+    flat = derive_postings(docs, cfg.analyzer, id_col, content_col)
     if cache:
         flat = flat.persist()
-    # doc_len per doc from the postings themselves (constant per doc_id);
-    # left join keeps zero-token docs with doc_len 0
-    lens = flat.groupBy("doc_id").agg(F.max("doc_len").alias("doc_len"))
-    doc_stats = (
-        docs.select(
-            F.col(id_col).alias("doc_id"),
-            F.sha2(F.col(content_col), 256).alias("content_sha256"),
-        )
-        .join(lens, "doc_id", "left")
-        .withColumn("doc_len", F.coalesce(F.col("doc_len"), F.lit(0)))
-        .select("doc_id", "doc_len", "content_sha256")
-    )
+    doc_stats = derive_doc_stats(docs, flat, id_col, content_col)
     term_stats = build_term_stats(flat)
     if cache:
         term_stats = term_stats.persist()
@@ -443,25 +451,16 @@ def build_index(
         total_tokens=int(srow["tot"] or 0),
         vocab_size=int(srow["v"] or 0),
     )
-    idx = InvertedIndex(
+    return InvertedIndex(
         doc_stats=doc_stats,
         postings=flat,
         term_stats=term_stats,
         stats=stats,
         config=cfg,
     )
-    if compress:
-        from .wand import build_compressed_postings
-
-        idx.blobs = build_compressed_postings(idx)
-    return idx
 
 
-def merge_indexes(
-    a: InvertedIndex,
-    b: InvertedIndex,
-    compress: bool = False,
-) -> InvertedIndex:
+def merge_indexes(a: InvertedIndex, b: InvertedIndex) -> InvertedIndex:
     """Logical segment merge: two indexes over DISJOINT doc-id spaces
     become one index over their union — the relational form of Lucene's
     ``IndexWriter.addIndexes`` / background segment merging (the
@@ -482,11 +481,12 @@ def merge_indexes(
 
     Collection scalars are additive (n_docs, total_tokens); vocab_size
     is NOT (overlapping vocabularies), so it costs the one count action
-    over the merged term table. With ``compress=True`` the delta+varbyte
-    blob table is rebuilt from the merged flat postings — blobs are
-    doc-sharded by pmod(mix(doc_id), shards), so blobs of the two inputs
-    cannot simply be concatenated (a term present in both sides must
-    re-block its union posting list to keep block maxima exact)."""
+    over the merged term table. The merged handle carries no blob
+    table: its reader rebuilds the delta+varbyte blobs from the merged
+    flat postings on first use — blobs are doc-sharded by
+    pmod(mix(doc_id), shards), so blobs of the two inputs cannot simply
+    be concatenated (a term present in both sides must re-block its
+    union posting list to keep block maxima exact)."""
     if a.config.analyzer != b.config.analyzer:
         raise ValueError(
             "merge_indexes: analyzer configs differ — indexes are not "
@@ -507,18 +507,13 @@ def merge_indexes(
         total_tokens=a.stats.total_tokens + b.stats.total_tokens,
         vocab_size=int(term_stats.count()),
     )
-    idx = InvertedIndex(
+    return InvertedIndex(
         doc_stats=doc_stats,
         postings=postings,
         term_stats=term_stats,
         stats=stats,
         config=a.config,
     )
-    if compress:
-        from .wand import build_compressed_postings
-
-        idx.blobs = build_compressed_postings(idx)
-    return idx
 
 
 def prune_index_static(

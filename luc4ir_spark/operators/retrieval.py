@@ -3584,14 +3584,6 @@ def to_trec_run(
     ).orderBy("qid", "rank")
 
 
-def fetch_topk_docs(
-    run: DataFrame, docs: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
-    """Join top-k back to stored content (reference:
-    TrecDocRetriever.java:283-285 reader.document() per hit)."""
-    return run.join(docs, run.doc_id == F.col(id_col), "inner")
-
-
 def comb_fuse(
     runs: DataFrame,
     method: str = "mnz",

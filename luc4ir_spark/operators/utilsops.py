@@ -176,32 +176,6 @@ def sample_uniform(
     return df.withColumn("_k", key).orderBy("_k").limit(n).drop("_k")
 
 
-def sample_weighted_rows(
-    df: DataFrame,
-    n: int,
-    weight_col: str,
-    seed: int = 42,
-    key_cols: list[str] | None = None,
-) -> DataFrame:
-    """Weighted sampling without replacement via the exponential-sort
-    trick (Efraimidis-Spirakis), returning the ORIGINAL rows: key =
-    u^(1/w) with u derived from the stable row CONTENT hash; top-n
-    keys via ORDER BY LIMIT (TakeOrderedAndProject — same
-    no-global-sort shape as ``sample_uniform``). The id-keyed,
-    oracle-gated variant that reports its keys and ranks is
-    ``sample_weighted`` below — this row-content form predates it and
-    serves callers sampling rows without a stable id column."""
-    u = (_row_hash(df, seed, key_cols).cast("double")
-         / F.lit(float(2**63)) + 1.0) / 2.0
-    key = F.pow(u, F.lit(1.0) / F.col(weight_col))
-    return (
-        df.withColumn("_k", key)
-        .orderBy(F.desc("_k"))
-        .limit(n)
-        .drop("_k")
-    )
-
-
 def sample_hash_stratified(
     df: DataFrame,
     rates: dict[str, float],

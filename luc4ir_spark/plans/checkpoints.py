@@ -5,7 +5,12 @@ reference: indexing/TrecDocIndexer.java:154-155) — a non-starter for a
 10^12-file corpus where a build is hours of cluster time and ANY restart
 must not redo finished work. This module adds what the reference lacks:
 
-- the postings build is split into ``num_slices`` term-hash slices
+- postings and doc_stats come from the same derivation as
+  ``build_index`` (operators/indexer.py ``derive_postings`` /
+  ``derive_doc_stats``): the flat postings are the one persisted table,
+  doc_stats and every slice read it, and it is unpersisted on every
+  exit, so a build leaves nothing cached in the session;
+- the postings are written as ``num_slices`` term-hash slices
   (pmod(xxhash64(term), num_slices)); each slice is an independent job
   whose output lands in ``postings/slice=<i>/``;
 - a JSON manifest records lineage (input fingerprint, config hash,
@@ -33,15 +38,13 @@ from dataclasses import asdict
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.analysis import AnalyzerConfig
 from ..operators.indexer import (
     CollectionStats,
     IndexConfig,
     InvertedIndex,
-    build_doc_stats,
-    build_flat_postings,
     build_term_stats,
-    tokenize,
+    derive_doc_stats,
+    derive_postings,
 )
 
 MANIFEST = "manifest.json"
@@ -126,8 +129,6 @@ def build_index_checkpointed(
             "metrics": {},
         }
 
-    toks = tokenize(docs, cfg.analyzer, id_col, content_col).persist()
-
     def stage_done(name: str) -> bool:
         return name in m["completed_stages"]
 
@@ -142,35 +143,38 @@ def build_index_checkpointed(
         _save_manifest(out_dir, m)
         log(f"[checkpoint] {stage}: {rows} rows in {dt:.2f}s")
 
-    # ---- stage: doc_stats
-    if not stage_done("doc_stats"):
-        t0 = time.time()
-        ds = build_doc_stats(docs, toks, id_col, content_col)
-        path = os.path.join(out_dir, "doc_stats")
-        ds.write.mode("overwrite").parquet(path)
-        n = spark.read.parquet(path).count()
-        m["completed_stages"].append("doc_stats")
-        record("doc_stats", t0, n, {"docs_per_sec_key": True})
-    else:
-        log("[checkpoint] doc_stats: already complete, skipping")
+    # the one parse: doc_stats and every slice read this persisted table;
+    # the build owns it and unpersists it on every exit
+    flat = derive_postings(docs, cfg.analyzer, id_col, content_col).persist()
+    try:
+        # ---- stage: doc_stats
+        if not stage_done("doc_stats"):
+            t0 = time.time()
+            ds = derive_doc_stats(docs, flat, id_col, content_col)
+            path = os.path.join(out_dir, "doc_stats")
+            ds.write.mode("overwrite").parquet(path)
+            n = spark.read.parquet(path).count()
+            m["completed_stages"].append("doc_stats")
+            record("doc_stats", t0, n, {"docs_per_sec_key": True})
+        else:
+            log("[checkpoint] doc_stats: already complete, skipping")
 
-    # ---- stage: postings, per term-hash slice
-    flat = build_flat_postings(toks).withColumn(
-        "slice", F.pmod(F.xxhash64("term"), F.lit(num_slices)).cast("int")
-    )
-    todo = [s for s in range(num_slices) if s not in m["completed_slices"]]
-    if todo:
-        flat = flat.persist()
-    for s in todo:
-        t0 = time.time()
-        part = flat.filter(F.col("slice") == s).drop("slice")
-        path = os.path.join(out_dir, "postings", f"slice={s}")
-        part.write.mode("overwrite").parquet(path)
-        n = spark.read.parquet(path).count()
-        m["completed_slices"].append(s)
-        record(f"postings_slice_{s}", t0, n)
-    if not todo:
-        log("[checkpoint] postings: all slices complete, skipping")
+        # ---- stage: postings, per term-hash slice
+        slice_of = F.pmod(F.xxhash64("term"), F.lit(num_slices)).cast("int")
+        done = m["completed_slices"]
+        todo = [s for s in range(num_slices) if s not in done]
+        for s in todo:
+            t0 = time.time()
+            part = flat.filter(slice_of == s)
+            path = os.path.join(out_dir, "postings", f"slice={s}")
+            part.write.mode("overwrite").parquet(path)
+            n = spark.read.parquet(path).count()
+            m["completed_slices"].append(s)
+            record(f"postings_slice_{s}", t0, n)
+        if not todo:
+            log("[checkpoint] postings: all slices complete, skipping")
+    finally:
+        flat.unpersist()
 
     # ---- stage: term_stats + collection stats (derived; cheap, last)
     if not stage_done("term_stats"):
@@ -195,8 +199,6 @@ def build_index_checkpointed(
         record("term_stats", t0, n)
     else:
         log("[checkpoint] term_stats: already complete, skipping")
-
-    toks.unpersist()
     return m
 
 

@@ -24,16 +24,14 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from ..functions.analysis import AnalyzerConfig
 from ..operators.indexer import (
     IndexConfig,
     InvertedIndex,
-    build_flat_postings,
     build_term_stats,
     collect_collection_stats,
-    tokenize,
+    derive_doc_stats,
+    derive_postings,
 )
 
 DOC_SCHEMA = "doc_id long, content string"
@@ -61,18 +59,17 @@ def write_index_batch(
     id_col: str = "doc_id",
     content_col: str = "content",
 ) -> None:
-    """One micro-batch -> postings + doc_stats partitions (module-level so
-    replay idempotence is directly testable)."""
+    """One micro-batch -> postings + doc_stats partitions, derived as
+    every other build derives them (``derive_postings`` /
+    ``derive_doc_stats``; module-level so replay idempotence is directly
+    testable)."""
     if batch_df.isEmpty():
         return
-    toks = tokenize(batch_df, cfg.analyzer, id_col, content_col)
-    flat = build_flat_postings(toks)
+    flat = derive_postings(batch_df, cfg.analyzer, id_col, content_col)
     _write_batch_partition(
         flat, os.path.join(index_dir, "postings"), batch_id
     )
-    ds = toks.select(
-        "doc_id", F.size("tokens").cast("long").alias("doc_len")
-    )
+    ds = derive_doc_stats(batch_df, flat, id_col, content_col)
     _write_batch_partition(
         ds, os.path.join(index_dir, "doc_stats"), batch_id
     )

@@ -2,6 +2,7 @@
 rerun -> identical final index; lineage invalidation; streaming
 incremental index == batch index."""
 
+import dataclasses
 import json
 import os
 
@@ -128,6 +129,73 @@ def test_checkpointed_index_retrieves(spark, docs, tmp_path):
     assert rt.score_queries(idx, qt, k=5).count() == 5
 
 
+def _persisted_rdds(spark) -> set:
+    return set(spark.sparkContext._jsc.getPersistentRDDs())
+
+
+def test_checkpointed_build_leaves_nothing_persisted(spark, tmp_path):
+    """The build owns what it persists: a fresh build, a resume of a
+    partly completed directory and a no-op rerun, all in one session,
+    leave no persisted RDD behind."""
+    docs = spark.createDataFrame(
+        [(i, f"alpha beta gamma doc{i % 7} delta") for i in range(40)],
+        "doc_id long, content string",
+    )
+    out = str(tmp_path / "owned")
+    before = _persisted_rdds(spark)
+
+    cp.build_index_checkpointed(docs, out, CFG, num_slices=2)
+    assert not _persisted_rdds(spark) - before
+
+    manifest_path = os.path.join(out, "manifest.json")
+    with open(manifest_path) as fh:
+        m = json.load(fh)
+    m["completed_slices"] = [0]
+    m["completed_stages"] = []
+    with open(manifest_path, "w") as fh:
+        json.dump(m, fh)
+    logs: list[str] = []
+    cp.build_index_checkpointed(docs, out, CFG, num_slices=2, log=logs.append)
+    assert any("postings_slice_1" in l for l in logs)  # really resumed
+    assert not _persisted_rdds(spark) - before
+
+    cp.build_index_checkpointed(docs, out, CFG, num_slices=2)
+    assert not _persisted_rdds(spark) - before
+
+
+def test_checkpointed_english_matches_build_index(spark, tmp_path):
+    """With the default (english, Arrow-analyzed) analyzer the
+    checkpointed build writes exactly the tables build_index derives;
+    docs that analyze to no token (empty, only stopwords) keep
+    doc_len 0."""
+    docs = spark.createDataFrame(
+        [
+            (1, "Running runners ran the running race."),
+            (2, "The LICENSE of this file: see the license's terms."),
+            (3, ""),
+            (4, "the and of a to"),
+            (5, "import numpy; return the runner's results"),
+        ],
+        "doc_id long, content string",
+    )
+    cfg = ix.IndexConfig()
+    out = str(tmp_path / "english")
+    cp.build_index_checkpointed(docs, out, cfg, num_slices=2)
+    batch = ix.build_index(docs, cfg, cache=False)
+
+    def rows(df):
+        return sorted(map(tuple, df.collect()))
+
+    assert _postings_map(spark, out) == rows(batch.postings)
+    ds = spark.read.parquet(os.path.join(out, "doc_stats"))
+    assert rows(ds) == rows(batch.doc_stats)
+    doc_len = {r["doc_id"]: r["doc_len"] for r in ds.collect()}
+    assert doc_len[3] == 0 and doc_len[4] == 0
+    assert all(doc_len[d] > 0 for d in (1, 2, 5))
+    with open(os.path.join(out, "stats.json")) as fh:
+        assert json.load(fh) == dataclasses.asdict(batch.stats)
+
+
 def test_streaming_batch_replay_is_idempotent(spark, tmp_path):
     """foreachBatch is at-least-once: replaying a micro-batch (failure
     between sink write and checkpoint commit) must not duplicate
@@ -190,6 +258,10 @@ def test_streaming_incremental_equals_batch(spark, tmp_path):
         (r["term"], r["doc_id"], r["tf"]) for r in batch.postings.collect()
     )
     assert a == b
+    # doc_stats come from the same derivation, content_sha256 included
+    assert sorted(map(tuple, streamed.doc_stats.collect())) == sorted(
+        map(tuple, batch.doc_stats.collect())
+    )
     # and it answers queries identically
     qt = rt.queries_to_terms(spark, [("s1", "import license")], SIMPLE)
     ra = rt.score_queries(streamed, qt, k=10).collect()

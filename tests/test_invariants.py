@@ -6,7 +6,7 @@ import hashlib
 
 import numpy as np
 import pytest
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
@@ -278,6 +278,9 @@ def test_percolate_matches_brute_force(spark, docs_tokens):
         max_size=5,
     )
 )
+# subnormal max|x|: the scale underflowed to 0 / rounded |q| past 127
+@example(vecs=[[0.0, 5e-324]])
+@example(vecs=[[190 * 5e-324, 0.0]])
 def test_quantize_bound_property(spark, vecs):
     """Every dequantized component is within scale/2 of the original;
     q stays in [-127, 127]."""
