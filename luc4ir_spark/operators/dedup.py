@@ -1,9 +1,9 @@
 """Deduplication operators for large-scale corpus pipelines.
 
 Beyond the reference's IR core: the operations a 100 TB training-data
-pipeline runs over the same corpus table. All are pure DataFrame
-compositions (no Python in the hot path) designed around bounded shuffle
-fan-out:
+pipeline runs over the same corpus table. All are DataFrame
+compositions designed around bounded shuffle fan-out; the one Python
+step is SimHash's per-batch numpy bit count:
 
 - exact:    hash-groupBy on a content digest — one shuffle on the digest
 - n-gram/token Jaccard: inverted join on shingles with a df cap so
@@ -27,7 +27,6 @@ every doc identically, only marginally perturbing similarity estimates.
 
 from __future__ import annotations
 
-import os
 import re
 
 import numpy as np
@@ -224,10 +223,6 @@ def _perm_hash_fn(a, b):
     return lambda x: _perm_hash(F.lit(a), F.lit(b), x)
 
 
-def _bit_test_fn(b):
-    return lambda x: F.shiftright(x, b).bitwiseAND(F.lit(1)) == 1
-
-
 DEFAULT_MAX_SHINGLE_DF = 10_000
 DEFAULT_MAX_BUCKET_SIZE = 100_000
 
@@ -390,64 +385,16 @@ def _shingle_id_expr(col):
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
 
 
-# engine for the per-doc permutation minima: "sql" = array_min over
-# transform (JVM, but HOFs are CodegenFallback — every element hash is
-# an interpreted expression eval, num_hashes passes per doc), "arrow" =
-# one vectorized numpy kernel per Arrow batch (flatten the batch's sid
-# arrays, one (num_hashes x total) modular product, segmented
-# np.minimum.reduceat). Values are bit-identical: both compute
-# (a * (sid mod p) + b) mod p in int64 (a < 2^21, sid mod p < 2^31 =>
-# products < 2^52, exact in both engines), so the DuckDB oracles are
-# engine-agnostic. Default via $SPARK_GRAFT_MINHASH_ENGINE.
-MINHASH_MINIMA_ENGINE = os.environ.get("SPARK_GRAFT_MINHASH_ENGINE", "sql")
-
-
-def _minima_arrow_udf(num_hashes: int):
-    a = np.array(
-        [p[0] for p in MINHASH_PARAMS[:num_hashes]], dtype=np.int64
-    ).reshape(-1, 1)
-    b = np.array(
-        [p[1] for p in MINHASH_PARAMS[:num_hashes]], dtype=np.int64
-    ).reshape(-1, 1)
-
-    @F.pandas_udf("array<bigint>")
-    def minima(sids: pd.Series) -> pd.Series:
-        n = len(sids)
-        if n == 0:
-            return pd.Series([], dtype=object)
-        lens = np.fromiter((len(x) for x in sids), dtype=np.int64, count=n)
-        total = int(lens.sum())
-        if total == 0:
-            return pd.Series([None] * n, dtype=object)
-        flat = (
-            np.concatenate([np.asarray(x, dtype=np.int64) for x in sids])
-            % MERSENNE_P
-        )
-        prod = (a * flat + b) % MERSENNE_P  # (num_hashes, total)
-        offs = np.zeros(n, dtype=np.int64)
-        np.cumsum(lens[:-1], out=offs[1:])
-        mins = np.minimum.reduceat(prod, offs, axis=1)
-        # reduceat returns a bogus value for zero-length segments ->
-        # None (matches array_min over an empty array in the SQL engine)
-        return pd.Series(
-            [
-                mins[:, i].tolist() if lens[i] > 0 else None
-                for i in range(n)
-            ],
-            dtype=object,
-        )
-
-    return minima
-
-
-def minhash_minima_col(sids_col, num_hashes: int, engine: str | None = None):
+def minhash_minima_col(sids_col, num_hashes: int):
     """array<long> column of the ``num_hashes`` permutation minima over
-    a shingle-id array column, computed by the selected engine (see
-    ``MINHASH_MINIMA_ENGINE``). Bit-identical between engines."""
-    engine = engine or MINHASH_MINIMA_ENGINE
+    a shingle-id array column: one ``array_min(transform(...))`` per
+    permutation, (a * (sid mod p) + b) mod p in exact int64 (a < 2^21,
+    sid mod p < 2^31 => products < 2^52). Kept over a vectorized numpy
+    Arrow kernel of the same arithmetic, which returned bit-identical
+    minima but ran at 0.38x this path's speed
+    (BENCH/engine_cmp_r5.json): it pays the transfer of every doc's
+    shingle-id array across the UDF boundary."""
     col = F.col(sids_col) if isinstance(sids_col, str) else sids_col
-    if engine == "arrow":
-        return _minima_arrow_udf(num_hashes)(col)
     return F.array(
         *[
             F.array_min(F.transform(col, _perm_hash_fn(a, b)))
@@ -540,9 +487,9 @@ def _band_keyed(
         "_ss",
         F.transform("_ss", _shingle_id_expr).alias("_sids"),
     )
-    # minima via the selected engine (see minhash_minima_col);
-    # materialized as one array column so the per-band concat_ws below
-    # references attributes, not num_hashes re-evaluations
+    # minima materialized as one array column so the per-band
+    # concat_ws below references attributes, not num_hashes
+    # re-evaluations
     with_mins = with_sids.select(
         "doc_id",
         "_sids",
@@ -959,23 +906,14 @@ def _md5_hash64(col):
     return hi_signed * F.lit(2**32) + lo
 
 
-# engine for the per-doc simhash fingerprint: "sql" = num_bits JVM
-# filter-count HOF passes per doc (interpreted), "arrow" = one numpy
-# kernel per Arrow batch (64 vectorized bit-extract + segmented
-# reduceat passes over the batch's flattened hash arrays). Bit
-# semantics are identical: (h >> b) & 1 is the same arithmetic-shift
-# bit extract in int64 on both engines, and the uint64 accumulate +
-# int64 view reproduces the SQL side's -(2^63) top-bit literal.
-# default flipped to "arrow" in round 5 on measured evidence
-# (BENCH/engine_cmp_r5.json, 5 interleaved reps at 60k docs: arrow
-# median 5.0 s vs sql 15.3 s, min 3.61 vs 5.98, values bit-identical;
-# minhash minima stay "sql" — sql won all 5 reps there, 1.56 vs
-# 4.16 s min). The per-bit filter-count HOF chain scales with
-# num_bits=64 interpreted passes; the numpy reduceat kernel pays one
-# Arrow transfer and wins.
-SIMHASH_ENGINE = os.environ.get("SPARK_GRAFT_SIMHASH_ENGINE", "arrow")
-
-
+# per-doc simhash fingerprint: one numpy kernel per Arrow batch (64
+# vectorized bit-extract + segmented reduceat passes over the batch's
+# flattened hash arrays). (h >> b) & 1 is the arithmetic-shift bit
+# extract in int64, and the uint64 accumulate + int64 view sets the
+# top bit as -(2^63). Kept over a SQL chain of num_bits filter-count
+# HOF passes per doc, which returned bit-identical fingerprints but
+# ran ~3x slower (BENCH/engine_cmp_r5.json, 5 interleaved reps at 60k
+# docs: median 5.0 s here vs 15.3 s).
 def _simhash_arrow_udf(num_bits: int):
     @F.pandas_udf("bigint")
     def fp(hs: pd.Series) -> pd.Series:
@@ -997,7 +935,7 @@ def _simhash_arrow_udf(num_bits: int):
                 cnt = np.add.reduceat((flat >> b) & 1, offs)
                 vals |= ((2 * cnt > lens).astype(np.uint64)) << np.uint64(b)
         out = pd.Series(vals.view(np.int64)).astype(object)
-        out[lens == 0] = None  # matches the SQL engine's empty-set drop
+        out[lens == 0] = None  # empty shingle set -> no row
         return out
 
     return fp
@@ -1009,7 +947,6 @@ def simhash(
     num_bits: int = 64,
     hash_a: int = 1203077,
     hash_b: int = 52512857,
-    engine: str | None = None,
 ) -> DataFrame:
     """-> (doc_id, simhash): per-bit weighted majority fingerprint.
     Each distinct shingle votes tf=1 per bit of its hash; bit set iff
@@ -1020,12 +957,12 @@ def simhash(
     would leave bits 31+ permanently unset); <= 32 keeps the legacy
     (a * sid + b) mod p construction over 60-bit shingle ids.
 
-    Computed as a PURE PROJECTION: the per-bit +1/-1 vote sum is
-    positive iff more than half the shingle hashes have the bit set, so
-    each bit is one JVM array filter-count (higher-order functions run in the JVM expression evaluator — no Python, no shuffle) — no explode over
-    (shingles x bits) rows, no groupBy, zero shuffles. Docs with an
-    empty shingle set produce no row (matching the old aggregate
-    formulation)."""
+    Computed as a per-doc projection, no explode over (shingles x
+    bits) rows, no groupBy, zero shuffles: the hash array is built in
+    the JVM, and the per-bit +1/-1 vote sum is positive iff more than
+    half the shingle hashes have the bit set, which
+    ``_simhash_arrow_udf`` counts with numpy per Arrow batch. Docs with
+    an empty shingle set produce no row."""
     shset = shingle_set_expr(tokens_col, 1)
     if num_bits > 32:
         hs_expr = F.transform(shset, _md5_hash64)
@@ -1038,36 +975,9 @@ def simhash(
         )
     # materialize the hash array once — see minhash_signatures
     with_hs = docs.select("doc_id", hs_expr.alias("_hs"))
-    hs = F.col("_hs")
-    n = F.size(hs)
-    engine = engine or SIMHASH_ENGINE
-    if engine == "arrow":
-        return (
-            with_hs.select(
-                "doc_id", _simhash_arrow_udf(num_bits)(hs).alias("simhash")
-            )
-            .filter(F.col("simhash").isNotNull())
-        )
-    # bit b set iff vote sum > 0 iff 2 * |{h: bit b of h set}| > n.
-    # (h >> b) & 1 — mask, not % 2: an arithmetic shift of a negative
-    # 64-bit hash yields a negative value whose % 2 is -1. The b=63
-    # power is the Python literal -2^63 (1 << 63 overflows int64).
-    terms = []
-    for b in range(num_bits):
-        cnt = F.size(F.filter(hs, _bit_test_fn(b)))
-        power = -(2**63) if b == 63 else (1 << b)
-        terms.append(
-            F.when(cnt * 2 > n, F.lit(power).cast("long"))
-            .otherwise(F.lit(0).cast("long"))
-        )
-    total = terms[0]
-    for t in terms[1:]:
-        total = total + t
-    return (
-        with_hs.select("doc_id", total.alias("simhash"), n.alias("_n"))
-        .filter(F.col("_n") > 0)
-        .drop("_n")
-    )
+    return with_hs.select(
+        "doc_id", _simhash_arrow_udf(num_bits)(F.col("_hs")).alias("simhash")
+    ).filter(F.col("simhash").isNotNull())
 
 
 def simhash_pairs(

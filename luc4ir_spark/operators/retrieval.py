@@ -3566,7 +3566,12 @@ def to_trec_run(
     """(qid, doc_id, rank, score) -> TREC 6-column run rows
     ``qid Q0 docid rank score runid`` (reference writer:
     retriever/TrecDocRetriever.java:281-295; standard 6-col layout as in
-    the committed res.txt). ``docid_map``: (doc_id, docid_str)."""
+    the committed res.txt). ``docid_map``: (doc_id, docid_str).
+
+    The score column is cast to float32, the reference's
+    ``ScoreDoc.score`` float, so scores that differ below float32
+    resolution come out equal; ``rank`` is kept from ``run`` and so
+    carries the engine's double order (score desc, doc_id asc)."""
     out = run
     if docid_map is not None:
         out = out.join(docid_map, "doc_id").withColumn(

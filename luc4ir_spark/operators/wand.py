@@ -39,17 +39,21 @@ Build (``build_compressed_postings``):
     blob replication or posting masking (a doc's full score accumulates
     inside its one shard; shard results are disjoint and merge exactly).
 
-Query (``wand_topk``):
+Query (``score_queries_wand``):
     query terms ⋈ blobs (broadcast query side) ──groupBy(qid, salt)──▶
-    ``applyInPandas`` WAND: document-at-a-time pivot loop with a k-heap;
-    term upper bounds from the global (max_tf, min_dl) impacts, block
-    upper bounds refine at the pivot; blocks are decoded LAZILY — a
-    block whose upper bound cannot beat the heap floor theta is skipped
-    without touching its bytes. theta is shard-local (safe: shard-local
-    theta <= global theta, so pruning is only ever conservative).
-    Per-shard top-k then a tiny global per-qid merge. With shards > 1
-    every query fans out to ``shards`` independent kernel tasks — the
-    intra-query parallelism knob at cluster scale.
+    ``applyInPandas`` block-max kernel (``blockmax_topk_kernel``) with
+    a k-heap. The doc-id space is cut into windows on the union of the
+    terms' block boundaries (8 boundaries a window). A window's upper
+    bound is the sum, over terms, of the best (max_tf, min_dl) impact
+    among the term's blocks that overlap it; a window whose bound is
+    below the heap floor theta is skipped without decoding a byte.
+    Surviving windows bulk-decode their blocks and are scored with
+    numpy; only candidates at or above theta reach the heap. theta is
+    shard-local (safe: shard-local theta <= global theta, so pruning is
+    only ever conservative). Per-shard top-k then a tiny global per-qid
+    merge. With shards > 1 every query fans out to ``shards``
+    independent kernel tasks — the intra-query parallelism knob at
+    cluster scale.
 
 Tie semantics match the exhaustive path: score desc, doc_id asc; the
 heap orders by (score, -doc_id) and pruning uses strict ub < theta so
@@ -67,12 +71,10 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.codec import (
-    DEFAULT_BLOCK_SIZE,
     BlockDirectory,
     decode_block,
     decode_block_range,
     encode_posting_list,
-    varbyte_decode,
 )
 from .indexer import InvertedIndex, idf_lucene
 from .retrieval import Similarity
@@ -210,139 +212,6 @@ def _make_kernel(sim: Similarity, stats):
             return f
         return make
     raise ValueError(f"unknown similarity: {sim.kind}")
-
-
-class _Cursor:
-    """Lazy block-at-a-time posting cursor."""
-
-    __slots__ = (
-        "blob", "dirs", "score_fn", "term_ub", "n_blocks",
-        "blk", "ids", "tfs", "dls", "i", "cur_doc", "exhausted",
-    )
-
-    def __init__(self, blob, dirs: BlockDirectory, score_fn):
-        self.blob = np.frombuffer(blob, dtype=np.uint8)
-        self.dirs = dirs
-        self.score_fn = score_fn
-        self.n_blocks = dirs.offsets.size
-        # global upper bound: best block impact under the kernel
-        self.term_ub = float(
-            np.max(score_fn(dirs.max_tf.astype(np.float64),
-                            dirs.min_dl.astype(np.float64)))
-        )
-        self.blk = -1
-        self.ids = self.tfs = self.dls = None
-        self.i = 0
-        self.exhausted = False
-        self.cur_doc = -1
-        self._enter_block(0)
-        self._position(0)
-
-    def _enter_block(self, b: int):
-        if b >= self.n_blocks:
-            self.exhausted = True
-            self.cur_doc = 1 << 62
-            return
-        self.blk = b
-        self.ids, self.tfs, self.dls = decode_block(
-            self.blob, self.dirs, b
-        )
-        self.i = 0
-
-    def _position(self, i: int):
-        if self.exhausted:
-            return
-        self.i = i
-        self.cur_doc = int(self.ids[i])
-
-    def block_ub(self) -> float:
-        if self.exhausted:
-            return 0.0
-        b = self.blk
-        return float(
-            self.score_fn(
-                float(self.dirs.max_tf[b]), float(self.dirs.min_dl[b])
-            )
-        )
-
-    def advance_to(self, target: int):
-        """Move to the first doc >= target (block skip + in-block search)."""
-        if self.exhausted or self.cur_doc >= target:
-            return
-        if int(self.dirs.last_doc[self.blk]) < target:
-            b = int(np.searchsorted(self.dirs.last_doc, target, side="left"))
-            self._enter_block(b)
-            if self.exhausted:
-                return
-        i = int(np.searchsorted(self.ids, target, side="left"))
-        if i >= self.ids.size:  # only possible via float edge; guard
-            self._enter_block(self.blk + 1)
-            if self.exhausted:
-                return
-            i = 0
-        self._position(i)
-
-    def next_doc(self):
-        if self.exhausted:
-            return
-        if self.i + 1 < self.ids.size:
-            self._position(self.i + 1)
-        else:
-            self._enter_block(self.blk + 1)
-            if not self.exhausted:
-                self._position(0)
-
-    def score_current(self) -> float:
-        return float(
-            self.score_fn(float(self.tfs[self.i]), float(self.dls[self.i]))
-        )
-
-
-def wand_topk_kernel(cursors: list[_Cursor], k: int) -> list[tuple[int, float]]:
-    """Document-at-a-time WAND over a set of term cursors -> top-k
-    [(doc_id, score)] ordered score desc, doc_id asc."""
-    heap: list[tuple[float, int]] = []  # (score, -doc_id) min-heap
-
-    def theta() -> float:
-        return heap[0][0] if len(heap) >= k else -math.inf
-
-    cursors = [c for c in cursors if not c.exhausted]
-    while True:
-        live = [c for c in cursors if not c.exhausted]
-        if not live:
-            break
-        live.sort(key=lambda c: c.cur_doc)
-        # pivot: first cursor where the prefix UB sum could beat theta
-        acc = 0.0
-        pivot_idx = -1
-        for j, c in enumerate(live):
-            acc += c.term_ub
-            if acc >= theta() and acc > 0.0:
-                pivot_idx = j
-                break
-        if pivot_idx < 0:
-            break  # total remaining UB below theta: done
-        pivot_doc = live[pivot_idx].cur_doc
-        if live[0].cur_doc == pivot_doc:
-            # aligned: refine with block-level bounds before decoding tf
-            aligned = [c for c in live if c.cur_doc == pivot_doc]
-            block_sum = sum(c.block_ub() for c in aligned)
-            if block_sum >= theta():
-                score = sum(c.score_current() for c in aligned)
-                entry = (score, -pivot_doc)
-                if len(heap) < k:
-                    heapq.heappush(heap, entry)
-                elif entry > heap[0]:
-                    heapq.heapreplace(heap, entry)
-            for c in aligned:
-                c.next_doc()
-        else:
-            # advance all pre-pivot cursors up to the pivot doc
-            for c in live[:pivot_idx]:
-                c.advance_to(pivot_doc)
-    out = [(-nd, s) for s, nd in heap]
-    out.sort(key=lambda t: (-t[1], t[0]))
-    return out
 
 
 class _TermList:

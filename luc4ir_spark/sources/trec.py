@@ -118,61 +118,22 @@ def read_run(spark: SparkSession, path: str) -> DataFrame:
     )
 
 
-def write_run(run: DataFrame, path: str, single_file: bool = True) -> None:
-    """Write a TREC run. ``single_file=True`` gives the byte layout of
-    the reference's writer (one tab-separated file, rank-ascending per
-    qid) via a driver-side write — fine for run files (k docs × queries).
-    For cluster-scale outputs use single_file=False (distributed CSV)."""
+def write_run(run: DataFrame, path: str) -> None:
+    """Write a TREC run in the byte layout of the reference's writer:
+    one tab-separated file ``qid Q0 docid rank score runid``,
+    rank-ascending per qid, scores printed ``%.6f``, via a driver-side
+    write (run files are k docs x queries).
+
+    The score column is what ``retrieval.to_trec_run`` gives: float32,
+    the reference's ``ScoreDoc.score``. Two docs whose double scores
+    differ below float32 resolution print the same score; the rank
+    column still carries the engine's double order (score desc,
+    doc_id asc)."""
     cols = ["qid", "q0", "docid", "rank", "score", "runid"]
-    out = run.select(*cols).orderBy("qid", "rank")
-    if single_file:
-        rows = out.collect()
-        with open(path, "w", encoding="utf-8") as fh:
-            for r in rows:
-                fh.write(
-                    f"{r['qid']}\t{r['q0']}\t{r['docid']}\t{r['rank']}"
-                    f"\t{r['score']:.6f}\t{r['runid']}\n"
-                )
-    else:
-        out.write.mode("overwrite").option("sep", "\t").csv(path)
-
-
-def write_run_sharded(run: DataFrame, path: str) -> None:
-    """Distributed exact-byte TREC sink: one rank-ascending text shard
-    per qid under ``path/qid=<qid>/`` (repartition by qid -> in-task
-    sort -> dynamic-partition text write; each qid lands in exactly one
-    task, so exactly one part file per qid). No driver collect, no
-    coalesce(1) — the cluster-scale twin of ``write_run(single_file=
-    True)``.
-
-    Byte-exact assembly recipe: concatenate the shards in ascending
-    qid order (lexicographic, matching the single-file writer's
-    ``orderBy("qid")`` on a string column), e.g.
-
-        cat $(ls -d path/qid=*/ | sort)part-*  > run.txt
-
-    The directory-name sort stands in for ``orderBy("qid")`` only for
-    PATH-SAFE qids (``[A-Za-z0-9._-]``, consistent case): Spark
-    URL-escapes partition-unsafe characters (space, ':', '%', ...) in
-    directory names, and escaped names can sort differently from the
-    raw string column. TREC qids are numeric strings so this holds in
-    practice; for arbitrary qids derive the concat order from the
-    unescaped qid values instead of the directory listing.
-
-    Line format is identical (%.6f scores; JVM and CPython format
-    binary doubles to the same 6-decimal string except exact half-way
-    ties, which real scores do not hit)."""
-    line = F.format_string(
-        "%s\t%s\t%s\t%d\t%.6f\t%s",
-        F.col("qid"), F.col("q0"), F.col("docid"),
-        F.col("rank").cast("long"), F.col("score"), F.col("runid"),
-    )
-    (
-        run.select(F.col("qid"), F.col("rank"), line.alias("value"))
-        .repartition("qid")
-        .sortWithinPartitions("qid", "rank")
-        .select("qid", "value")
-        .write.partitionBy("qid")
-        .mode("overwrite")
-        .text(path)
-    )
+    rows = run.select(*cols).orderBy("qid", "rank").collect()
+    with open(path, "w", encoding="utf-8") as fh:
+        for r in rows:
+            fh.write(
+                f"{r['qid']}\t{r['q0']}\t{r['docid']}\t{r['rank']}"
+                f"\t{r['score']:.6f}\t{r['runid']}\n"
+            )

@@ -2,7 +2,6 @@
 the reference's last-vs-first RR quirk documented as a mode."""
 
 import math
-import os
 
 import pytest
 
@@ -120,40 +119,6 @@ def test_trec_roundtrip(spark, tmp_path, frames):
     }
     for qid, docid, rank in RUN:
         assert got[(qid, docid)] == rank
-
-
-def test_trec_sharded_writer_byte_exact(spark, tmp_path):
-    """The distributed per-qid sharded sink, concatenated in ascending
-    qid order, reproduces the single-file writer byte-for-byte — with
-    no driver collect and no coalesce(1)."""
-    import glob
-
-    from luc4ir_spark.sources import trec
-
-    rows = []
-    for q in range(7):
-        for rank in range(1, 6):
-            rows.append(
-                (f"q{q}", "Q0", f"d{q * 100 + rank}", rank,
-                 1.0 / (rank + q * 0.37), "r1")
-            )
-    full = spark.createDataFrame(
-        rows,
-        "qid string, q0 string, docid string, rank long,"
-        " score double, runid string",
-    )
-    single = str(tmp_path / "run.txt")
-    trec.write_run(full, single)
-    sharded = str(tmp_path / "sharded")
-    trec.write_run_sharded(full, sharded)
-    qdirs = sorted(glob.glob(os.path.join(sharded, "qid=*")))
-    assert len(qdirs) == 7
-    parts = []
-    for d in qdirs:
-        files = sorted(glob.glob(os.path.join(d, "part-*")))
-        assert len(files) == 1  # exactly one shard per qid
-        parts.append(open(files[0], "rb").read())
-    assert b"".join(parts) == open(single, "rb").read()
 
 
 def test_qrels_reader(spark, tmp_path):

@@ -2,7 +2,9 @@
 stopword-only queries, empty corpus, and hypothesis property tests for
 the posting codec."""
 
+import ast
 import hashlib
+import pathlib
 
 import numpy as np
 import pytest
@@ -651,3 +653,27 @@ def test_quantized_kmeans_codegen_bounded(spark):
         )
         assert "_d0" in plan and "_d3" in plan, plan[:2000]
         df.collect()  # executes: would log codegen errors if broken
+
+
+def test_only_session_reads_environment():
+    """Behaviour is chosen by arguments, not environment variables:
+    no module of the package except ``session.py`` (CPU count, driver
+    memory) reads ``os.environ`` or ``os.getenv``."""
+    pkg = pathlib.Path(ix.__file__).resolve().parents[1]
+    readers = []
+    for path in sorted(pkg.rglob("*.py")):
+        if path == pkg / "session.py":
+            continue
+        for node in ast.walk(ast.parse(path.read_text())):
+            if (
+                isinstance(node, ast.Attribute)
+                and node.attr in ("environ", "getenv")
+                and isinstance(node.value, ast.Name)
+                and node.value.id == "os"
+            ) or (
+                isinstance(node, ast.ImportFrom)
+                and node.module == "os"
+                and any(a.name in ("environ", "getenv") for a in node.names)
+            ):
+                readers.append(f"{path.relative_to(pkg)}:{node.lineno}")
+    assert readers == []

@@ -906,56 +906,6 @@ def test_lsh_pair_plans_checkpoint_the_projection(spark, tokens_df):
     assert "md5" not in plan2 and "ExistingRDD" in plan2
 
 
-def test_minhash_minima_engines_identical(spark, tokens_df, monkeypatch):
-    # the Arrow numpy kernel and the SQL HOF chain must be
-    # bit-identical (both compute (a*(sid%p)+b)%p in exact int64), so
-    # signatures AND the banded pair sets agree under either engine
-    sig_sql = {
-        (r["doc_id"], r["hash_id"]): r["min_hash"]
-        for r in dedup.minhash_signatures(tokens_df, num_hashes=8).collect()
-    }
-    pairs_sql = {
-        (r["a"], r["b"])
-        for r in dedup.minhash_lsh_pairs(
-            tokens_df, num_hashes=16, band_size=8, threshold=0.5
-        ).collect()
-    }
-    monkeypatch.setattr(dedup, "MINHASH_MINIMA_ENGINE", "arrow")
-    sig_arrow = {
-        (r["doc_id"], r["hash_id"]): r["min_hash"]
-        for r in dedup.minhash_signatures(tokens_df, num_hashes=8).collect()
-    }
-    pairs_arrow = {
-        (r["a"], r["b"])
-        for r in dedup.minhash_lsh_pairs(
-            tokens_df, num_hashes=16, band_size=8, threshold=0.5
-        ).collect()
-    }
-    assert sig_sql == sig_arrow
-    assert pairs_sql == pairs_arrow
-    assert len(sig_sql) > 0 and len(pairs_sql) > 0
-
-
-def test_simhash_engines_identical(spark, tokens_df):
-    # 64-bit (negative hashes, -(2^63) top bit) and 32-bit legacy
-    # constructions must agree bit-for-bit between engines
-    for bits in (64, 32):
-        sql = {
-            r["doc_id"]: r["simhash"]
-            for r in dedup.simhash(
-                tokens_df, num_bits=bits, engine="sql"
-            ).collect()
-        }
-        arrow = {
-            r["doc_id"]: r["simhash"]
-            for r in dedup.simhash(
-                tokens_df, num_bits=bits, engine="arrow"
-            ).collect()
-        }
-        assert sql == arrow
-        assert len(sql) > 0
-
-
 def test_dedup_corpus_keep_one_per_cluster(spark):
     # chain 1~2, 2~3 collapses transitively to representative 1 even
     # though (1,3) was never compared; 7~8 keeps 7; 9 (no pairs) kept

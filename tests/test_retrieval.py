@@ -145,6 +145,30 @@ def test_trec_run_format(spark, index):
         assert ranks == list(range(1, len(ranks) + 1))
 
 
+def test_trec_run_float32_scores_keep_engine_rank(spark, tmp_path):
+    """Run-file scores are float32 (the reference's ScoreDoc.score):
+    two docs whose double scores differ below float32 resolution print
+    the same score, and their ranks stay in the engine's double order
+    (score desc), not re-sorted by the collapsed score and doc id."""
+    import numpy as np
+
+    from luc4ir_spark.sources import trec
+
+    hi, lo = 2.00000052, 2.00000048
+    assert np.float32(hi) == np.float32(lo)
+    assert f"{hi:.6f}" != f"{lo:.6f}"
+    # engine-shaped run: doc 9 outranks doc 4 on its larger double score
+    run = spark.createDataFrame(
+        [("q1", 9, 1, hi), ("q1", 4, 2, lo)],
+        "qid string, doc_id long, rank long, score double",
+    )
+    out = str(tmp_path / "run.txt")
+    trec.write_run(rt.to_trec_run(run, "r"), out)
+    lines = [ln.split("\t") for ln in open(out).read().splitlines()]
+    assert [(ln[2], ln[3]) for ln in lines] == [("9", "1"), ("4", "2")]
+    assert lines[0][4] == lines[1][4] == f"{float(np.float32(hi)):.6f}"
+
+
 def test_lm_similarities_run(spark, index):
     qt = rt.queries_to_terms(spark, QUERIES, EN)
     for kind in ("lmdir", "lmjm"):

@@ -6,9 +6,12 @@ import pytest
 from pyspark.sql import functions as F
 
 from luc4ir_spark.functions.analysis import AnalyzerConfig
+from luc4ir_spark.functions.codec import decode_block_range, encode_posting_list
 from luc4ir_spark.operators import indexer as ix
 from luc4ir_spark.operators import retrieval as rt
 from luc4ir_spark.operators.wand import (
+    _TermList,
+    blockmax_topk_kernel,
     build_compressed_postings,
     score_queries_wand,
 )
@@ -60,6 +63,7 @@ def _compare(spark, idx, queries, k, sim=None):
         )
         for (_, _, se), (_, _, sw) in zip(e, w):
             assert sw == pytest.approx(se, rel=1e-9, abs=1e-12)
+    return wand
 
 
 QUERIES = [
@@ -75,6 +79,32 @@ def test_wand_matches_exhaustive(spark, seed):
     docs = synth_docs(120, 60, seed)
     idx = _index_for(spark, docs)
     _compare(spark, idx, QUERIES, k=15)
+
+
+@pytest.mark.parametrize(
+    "docs,queries",
+    [
+        ([], QUERIES),
+        (synth_docs(60, 30, 3), [("o1", "zzznotaterm"), ("o2", "qqqq xyzzy")]),
+        ([(0, ""), (1, "   "), (2, "?! -- ...")], QUERIES),
+    ],
+    ids=["empty_corpus", "oov_topics", "tokenless_docs"],
+)
+def test_wand_no_matches(spark, docs, queries):
+    assert _compare(spark, _index_for(spark, docs), queries, k=10) == []
+
+
+@pytest.mark.parametrize("shards", [1, 4])
+def test_wand_all_identical_docs(spark, shards):
+    """50 identical docs: every score ties, so the top-k is the k
+    smallest doc ids, in doc_id order, on every shard layout."""
+    ids = np.random.default_rng(5).permutation(np.arange(100, 150))
+    docs = [(int(d), "w0 w1 w2 w1") for d in ids]
+    idx = _index_for(spark, docs, salt_threshold=5, shards=shards)
+    got = _compare(spark, idx, [("t1", "w0 w1")], k=10)
+    assert [r["doc_id"] for r in sorted(got, key=lambda r: r["rank"])] == (
+        list(range(100, 110))
+    )
 
 
 def test_wand_full_depth(spark):
@@ -199,23 +229,37 @@ def test_wand_lm_similarities(spark):
         _compare(spark, idx, QUERIES[:2], k=10, sim=rt.Similarity(kind=kind))
 
 
-def test_docatatime_kernel_equals_blockmax_kernel():
-    """The reference doc-at-a-time WAND and the vectorized block-max
-    kernel must produce identical top-k on random lists."""
-    import numpy as np
+def _exhaustive_topk(terms, k):
+    """Plain numpy scorer: decode every block of every term, sum
+    per-doc scores, order by (score desc, doc_id asc)."""
+    ids_parts, sc_parts = [], []
+    for t in terms:
+        for ids, tfs, dls in decode_block_range(
+            t.buf, t.dirs, 0, t.dirs.offsets.size
+        ):
+            ids_parts.append(ids)
+            sc_parts.append(
+                t.score_fn(tfs.astype(np.float64), dls.astype(np.float64))
+            )
+    u, inv = np.unique(np.concatenate(ids_parts), return_inverse=True)
+    scores = np.zeros(u.size)
+    np.add.at(scores, inv, np.concatenate(sc_parts))
+    order = np.lexsort((u, -scores))[:k]
+    return [(int(u[i]), float(scores[i])) for i in order]
 
-    from luc4ir_spark.functions.codec import encode_posting_list
-    from luc4ir_spark.operators.wand import (
-        _Cursor,
-        _TermList,
-        blockmax_topk_kernel,
-        wand_topk_kernel,
-    )
 
+def _assert_same_topk(got, want, msg=""):
+    assert [d for d, _ in got] == [d for d, _ in want], msg
+    for (_, sg), (_, sw) in zip(got, want):
+        assert sg == pytest.approx(sw, rel=1e-12), msg
+
+
+def test_blockmax_kernel_equals_exhaustive():
+    """The block-max kernel returns the exhaustive top-k on random
+    lists."""
     rng = np.random.default_rng(21)
     for trial in range(5):
         terms = []
-        cursors = []
         for t in range(3):
             n = int(rng.integers(20, 300))
             ids = np.sort(
@@ -230,20 +274,39 @@ def test_docatatime_kernel_equals_blockmax_kernel():
                 return w * tf / (tf + 0.7 * (0.7 + 0.3 * dl / 50.0))
 
             terms.append(_TermList(blob, d, fn))
-            cursors.append(_Cursor(blob, d, fn))
         for k in (5, 50):
-            a = blockmax_topk_kernel(terms, k)
-            b = wand_topk_kernel(cursors, k)
-            # cursors are stateful: rebuild for the second k
-            cursors = [
-                _Cursor(tl.buf.tobytes(), tl.dirs, tl.score_fn)
-                for tl in terms
-            ]
-            assert [d_ for d_, _ in a] == [d_ for d_, _ in b], (
-                f"trial {trial} k={k}"
+            _assert_same_topk(
+                blockmax_topk_kernel(terms, k),
+                _exhaustive_topk(terms, k),
+                f"trial {trial} k={k}",
             )
-            for (_, sa), (_, sb) in zip(a, b):
-                assert sa == pytest.approx(sb, rel=1e-12)
+
+
+def test_blockmax_kernel_skips_blocks():
+    """Block-max pruning fires: short docs (ids < 1000) fill the top-10
+    early, after which every long-doc window's upper bound is below the
+    heap floor and its blocks are never decoded."""
+    rng = np.random.default_rng(3)
+    n = 20_000
+    dl_all = np.where(np.arange(n) < 1000, 10, 1000)
+    avgdl = float(dl_all.mean())
+    terms = []
+    for p in (0.5, 0.3):
+        ids = np.flatnonzero(rng.random(n) < p).astype(np.int64)
+        tfs = rng.integers(1, 5, ids.size)
+        blob, d = encode_posting_list(ids, tfs, dl_all[ids], block_size=128)
+        idf = float(np.log(1 + (n - ids.size + 0.5) / (ids.size + 0.5)))
+
+        def fn(tf, dl, idf=idf):
+            return idf * tf / (tf + 1.2 * (0.25 + 0.75 * dl / avgdl))
+
+        terms.append(_TermList(blob, d, fn))
+    top = blockmax_topk_kernel(terms, 10)
+    for t in terms:
+        assert len(t.cache) < t.dirs.offsets.size // 2, (
+            f"decoded {len(t.cache)} of {t.dirs.offsets.size} blocks"
+        )
+    _assert_same_topk(top, _exhaustive_topk(terms, 10))
 
 
 def test_compressed_postings_consistent_with_flat(spark):
