@@ -8,10 +8,16 @@ this module implements it as a custom physical kernel:
 
 Build (``build_compressed_postings``):
     flat postings ──join df──▶ shuffle key (df > threshold ⇒
-    shard(doc_id), else 0) ──shuffle by (term, key)──▶
-    ``applyInPandas`` encode: sort by doc_id, split by shard(doc_id),
-    one delta+varbyte blob + per-block (last_doc, max_tf, min_dl)
-    impact directory PER NON-EMPTY SHARD.
+    shard(doc_id), else 0) ──repartition by (term, key)──▶ sort within
+    partitions by (term, key, doc_id) ──▶ one ``mapInArrow`` streaming
+    kernel per partition (``encode_sorted_postings``): it finds the
+    (term, key) group boundaries in each Arrow batch with vectorized
+    compares, splits each closed group by shard(doc_id) and writes one
+    delta+varbyte blob + per-block (last_doc, max_tf, min_dl) impact
+    directory PER NON-EMPTY SHARD. Only the last, still-open group is
+    carried into the next batch, so a task holds one batch plus one
+    open group, and the UDF is called once per partition, not once per
+    group.
 
     shard(doc_id) = pmod(mix(doc_id), shards) where mix is the
     engine-portable multiplicative hash (functions/hashing.py) — a bare
@@ -27,7 +33,7 @@ Build (``build_compressed_postings``):
     then <= n_query_terms * target_postings_per_shard postings (encoded
     ~2-6 B each + one decoded block per term at a time).
 
-    Two distinct roles: the SHUFFLE key bounds the largest reducer group
+    Two distinct roles: the SHUFFLE key bounds the largest encode group
     (a degenerate term occurring in every doc of a 10^12-file corpus
     becomes num_salt_shards independently-encoded sub-groups instead of
     one monster group — only df > salt_df_threshold terms pay the extra
@@ -64,9 +70,13 @@ from __future__ import annotations
 
 import heapq
 import math
+from collections.abc import Iterable, Iterator
+from functools import partial
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -76,6 +86,7 @@ from ..functions.codec import (
     decode_block_range,
     encode_posting_list,
 )
+from ..functions.hashing import mix_shard_expr, mix_shard_np
 from .indexer import InvertedIndex, idf_lucene
 from .retrieval import Similarity
 
@@ -85,6 +96,18 @@ BLOB_SCHEMA = (
     " blk_last_doc array<long>, blk_max_tf array<int>,"
     " blk_min_dl array<long>"
 )
+# the same schema as the Arrow types Spark maps BLOB_SCHEMA to
+BLOB_ARROW_SCHEMA = pa.schema([
+    ("term", pa.string()),
+    ("salt", pa.int32()),
+    ("n_docs", pa.int64()),
+    ("blob", pa.binary()),
+    ("blk_offsets", pa.list_(pa.int64())),
+    ("blk_ndocs", pa.list_(pa.int32())),
+    ("blk_last_doc", pa.list_(pa.int64())),
+    ("blk_max_tf", pa.list_(pa.int32())),
+    ("blk_min_dl", pa.list_(pa.int64())),
+])
 
 
 MAX_SALT_SHARDS = 4096
@@ -110,14 +133,86 @@ def derive_num_salt_shards(index: InvertedIndex) -> int:
     )
 
 
+def _encode_group(rows: dict, term: str, chunks: list, shards: int, bs: int):
+    """Encode one closed (term, _key) group — its doc_id-sorted
+    (doc_id, tf, doc_len) rows, in one or more chunks — as one blob per
+    non-empty shard(doc_id), appended to the BLOB_SCHEMA column lists
+    ``rows``."""
+    ids, tfs, dls = (np.concatenate(c) for c in zip(*chunks))
+    shard_of = mix_shard_np(ids, shards)
+    for s in np.unique(shard_of):
+        m = shard_of == s
+        blob, d = encode_posting_list(ids[m], tfs[m], dls[m], block_size=bs)
+        for name, v in zip(BLOB_ARROW_SCHEMA.names, (
+            term, int(s), int(m.sum()), blob,
+            d.offsets, d.n_docs, d.last_doc, d.max_tf, d.min_dl,
+        )):
+            rows[name].append(v)
+
+
+def encode_sorted_postings(
+    batches: Iterable[pa.RecordBatch], shards: int, block_size: int
+) -> Iterator[pa.RecordBatch]:
+    """Streaming encode kernel: Arrow batches of (term, _key, doc_id, tf,
+    doc_len) rows sorted by (term, _key, doc_id) -> BLOB_SCHEMA batches,
+    one per input batch plus one for the group still open at the end.
+
+    Group boundaries are found per batch with vectorized compares; a
+    group is encoded (``_encode_group``) once the next one starts. Only
+    the rows of the last, still-open group are carried to the next
+    batch, whose first key is checked against the carried key, so a
+    group spanning many batches is never re-scanned and memory is one
+    batch plus one open group."""
+    open_key = None
+    open_chunks: list[list[np.ndarray]] = []
+    for batch in batches:
+        rows = {name: [] for name in BLOB_ARROW_SCHEMA.names}
+        n = batch.num_rows
+        if n:
+            terms = batch.column("term")
+            keys = batch.column("_key").to_numpy(zero_copy_only=False)
+            cols = [
+                batch.column(c).to_numpy(zero_copy_only=False)
+                for c in ("doc_id", "tf", "doc_len")
+            ]
+            new = keys[1:] != keys[:-1]
+            new |= pc.not_equal(
+                terms.slice(1), terms.slice(0, n - 1)
+            ).to_numpy(zero_copy_only=False)
+            starts = np.flatnonzero(np.concatenate(([True], new)))
+            bounds = np.append(starts, n).tolist()
+            for i, key in enumerate(zip(
+                pc.take(terms, starts).to_pylist(), keys[starts].tolist()
+            )):
+                if key != open_key:
+                    if open_key is not None:
+                        _encode_group(
+                            rows, open_key[0], open_chunks, shards, block_size
+                        )
+                    open_key, open_chunks = key, []
+                open_chunks.append([c[bounds[i]:bounds[i + 1]] for c in cols])
+            # the open group may go on in the next batch: keep a copy of
+            # its rows here, not a view that pins this whole batch
+            open_chunks[-1] = [c.copy() for c in open_chunks[-1]]
+        yield pa.RecordBatch.from_pydict(rows, schema=BLOB_ARROW_SCHEMA)
+    if open_key is not None:
+        rows = {name: [] for name in BLOB_ARROW_SCHEMA.names}
+        _encode_group(rows, open_key[0], open_chunks, shards, block_size)
+        yield pa.RecordBatch.from_pydict(rows, schema=BLOB_ARROW_SCHEMA)
+
+
 def build_compressed_postings(
     index: InvertedIndex,
     block_size: int | None = None,
 ) -> DataFrame:
-    """flat postings -> (term, salt, blob + block directory) table."""
-    from ..deploy import ensure_package_on_executors
+    """flat postings -> (term, salt, blob + block directory) table.
 
-    from ..functions.hashing import mix_shard_expr, mix_shard_np
+    The postings are shuffled by (term, _key), sorted within each
+    partition by (term, _key, doc_id) and encoded by one streaming
+    ``mapInArrow`` kernel per partition (``encode_sorted_postings``):
+    one Python UDF call per partition, not one per group, and a task
+    holds one Arrow batch plus one open group."""
+    from ..deploy import ensure_package_on_executors
 
     ensure_package_on_executors(index.postings.sparkSession)
     cfg = index.config
@@ -128,47 +223,24 @@ def build_compressed_postings(
     # the shuffle key only BOUNDS group sizes (high-df terms pre-split);
     # the emitted blobs are uniformly doc-sharded by shard(doc_id) for
     # EVERY term — see module docstring. The Spark-side key and the
-    # numpy-side shard split below are the SAME mixed-hash function.
+    # kernel's numpy shard split are the SAME mixed-hash function.
     flat = index.postings.join(
         index.term_stats.select("term", "df"), "term"
-    ).withColumn(
-        "_key",
+    ).select(
+        "term",
         F.when(
             F.col("df") > threshold, mix_shard_expr("doc_id", shards)
-        ).otherwise(F.lit(0)),
+        ).otherwise(F.lit(0)).alias("_key"),
+        "doc_id", "tf", "doc_len",
     )
-
-    def encode(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("doc_id")
-        ids_all = pdf["doc_id"].to_numpy()
-        shard_of = mix_shard_np(ids_all, shards) if shards > 1 else np.zeros(
-            len(ids_all), dtype=np.int64
+    return (
+        flat.repartition("term", "_key")
+        .sortWithinPartitions("term", "_key", "doc_id")
+        .mapInArrow(
+            partial(encode_sorted_postings, shards=shards, block_size=bs),
+            BLOB_SCHEMA,
         )
-        out: dict[str, list] = {
-            "term": [], "salt": [], "n_docs": [], "blob": [],
-            "blk_offsets": [], "blk_ndocs": [], "blk_last_doc": [],
-            "blk_max_tf": [], "blk_min_dl": [],
-        }
-        term = pdf["term"].iloc[0]
-        tfs_all = pdf["tf"].to_numpy()
-        dls_all = pdf["doc_len"].to_numpy()
-        for s in np.unique(shard_of):
-            m = shard_of == s
-            blob, d = encode_posting_list(
-                ids_all[m], tfs_all[m], dls_all[m], block_size=bs
-            )
-            out["term"].append(term)
-            out["salt"].append(int(s))
-            out["n_docs"].append(int(m.sum()))
-            out["blob"].append(blob)
-            out["blk_offsets"].append(d.offsets.tolist())
-            out["blk_ndocs"].append(d.n_docs.tolist())
-            out["blk_last_doc"].append(d.last_doc.tolist())
-            out["blk_max_tf"].append(d.max_tf.tolist())
-            out["blk_min_dl"].append(d.min_dl.tolist())
-        return pd.DataFrame(out)
-
-    return flat.groupBy("term", "_key").applyInPandas(encode, BLOB_SCHEMA)
+    )
 
 
 # --------------------------------------------------------------- scoring

@@ -36,7 +36,6 @@ stages: dict[str, list[float]] = {}
 
 
 def timed(name, fn):
-    sc = fn.__globals__.get("spark").sparkContext if False else None
     out = None
     for _ in range(REPS):
         t0 = time.time()

@@ -2,21 +2,30 @@
 including under salting — the SURVEY §5 unit plan's core invariant."""
 
 import numpy as np
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
 from luc4ir_spark.functions.analysis import AnalyzerConfig
 from luc4ir_spark.functions.codec import decode_block_range, encode_posting_list
+from luc4ir_spark.functions.hashing import mix_shard_np
 from luc4ir_spark.operators import indexer as ix
 from luc4ir_spark.operators import retrieval as rt
 from luc4ir_spark.operators.wand import (
+    BLOB_ARROW_SCHEMA,
+    BLOB_SCHEMA,
     _TermList,
     blockmax_topk_kernel,
     build_compressed_postings,
+    derive_num_salt_shards,
+    encode_sorted_postings,
     score_queries_wand,
 )
 
 SIMPLE = AnalyzerConfig(mode="simple")
+BLK_COLUMNS = (
+    "blk_offsets", "blk_ndocs", "blk_last_doc", "blk_max_tf", "blk_min_dl"
+)
 
 
 def synth_docs(n_docs: int, vocab: int, seed: int):
@@ -192,8 +201,6 @@ def test_salted_sharding_structured_ids(spark):
 
 
 def test_derive_num_salt_shards(spark):
-    from luc4ir_spark.operators.wand import derive_num_salt_shards
-
     ts = spark.createDataFrame(
         [("the", 10_000_000, 20_000_000), ("rare", 3, 3)],
         "term string, df long, cf long",
@@ -322,6 +329,138 @@ def test_compressed_postings_consistent_with_flat(spark):
     }
     for r in idx.term_stats.collect():
         assert by_term[r["term"]] == r["df"]
+
+
+def _blob_rows(records):
+    """Blob-table rows (Spark Rows or Arrow dicts) as comparable tuples."""
+    return [
+        (r["term"], r["salt"], r["n_docs"], bytes(r["blob"]))
+        + tuple(tuple(r[c]) for c in BLK_COLUMNS)
+        for r in records
+    ]
+
+
+def _reference_blobs(postings, shards, block_size):
+    """Plain-Python blob table: per term, sort by doc_id, split by
+    shard(doc_id), encode each shard's list; rows sorted by
+    (term, salt)."""
+    by_term = {}
+    for term, doc_id, tf, dl in postings:
+        by_term.setdefault(term, []).append((doc_id, tf, dl))
+    rows = []
+    for term, posts in by_term.items():
+        ids, tfs, dls = (np.array(c, dtype=np.int64) for c in zip(*sorted(posts)))
+        shard_of = mix_shard_np(ids, shards)
+        for s in np.unique(shard_of):
+            m = shard_of == s
+            blob, d = encode_posting_list(ids[m], tfs[m], dls[m], block_size)
+            rows.append((term, int(s), int(m.sum()), blob) + tuple(
+                tuple(a.tolist()) for a in (
+                    d.offsets, d.n_docs, d.last_doc, d.max_tf, d.min_dl
+                )
+            ))
+    return sorted(rows, key=lambda r: r[:2])
+
+
+def _sorted_postings_batch(seed, shards, threshold):
+    """(term, _key, doc_id, tf, doc_len) rows sorted like the encode
+    plan's partitions: _key = shard(doc_id) for df > threshold, else
+    0. One term has 150 postings, so a batch can lie inside it."""
+    rng = np.random.default_rng(seed)
+    cols = {c: [] for c in ("term", "_key", "doc_id", "tf", "doc_len")}
+    for t, df in enumerate([150, 1, 2, 7, 30, 64, 1, 3, 12, 40]):
+        ids = rng.choice(2000, size=df, replace=False)
+        keys = mix_shard_np(ids, shards) if df > threshold else 0 * ids
+        for key, doc_id in sorted(zip(keys.tolist(), ids.tolist())):
+            cols["term"].append(f"t{t}")
+            cols["_key"].append(key)
+            cols["doc_id"].append(doc_id)
+            cols["tf"].append(int(rng.integers(1, 9)))
+            cols["doc_len"].append(int(rng.integers(1, 300)))
+    return pa.RecordBatch.from_arrays(
+        [
+            pa.array(cols["term"]),
+            pa.array(cols["_key"], pa.int32()),
+            pa.array(cols["doc_id"], pa.int64()),
+            pa.array(cols["tf"], pa.int32()),
+            pa.array(cols["doc_len"], pa.int64()),
+        ],
+        names=list(cols),
+    )
+
+
+@pytest.mark.parametrize("shards", [1, 4])
+@pytest.mark.parametrize("seed", range(6))
+def test_encode_kernel_batch_splits(seed, shards):
+    """The streaming encode kernel gives the same rows however its
+    sorted input is cut into batches — a cut inside a group, a batch
+    wholly inside one group, one-row batches, empty batches — and each
+    row equals encode_posting_list on that (term, shard)'s postings."""
+    batch = _sorted_postings_batch(seed, shards, threshold=10)
+    n = batch.num_rows
+    rng = np.random.default_rng(100 + seed)
+    cut_sets = [
+        list(range(n + 1)),  # one-row batches
+        [0, 0, 3, 3, 3, n, n],  # empty batches at the ends and inside
+        [0, 5, 40, 41, 149, n],  # [5, 40) lies inside the 150-row term
+        sorted({0, n, *rng.integers(0, n + 1, size=12).tolist()}),
+        sorted([0, n, *rng.integers(0, n + 1, size=30).tolist()]),
+    ]
+
+    def run(batches):
+        out = list(encode_sorted_postings(iter(batches), shards, 16))
+        assert all(b.schema == BLOB_ARROW_SCHEMA for b in out)
+        assert len(out) == len(batches) + any(b.num_rows for b in batches)
+        return _blob_rows(pa.Table.from_batches(out).to_pylist())
+
+    whole = run([batch])
+    for cuts in cut_sets:
+        parts = [batch.slice(a, b - a) for a, b in zip(cuts, cuts[1:])]
+        assert run(parts) == whole, cuts
+    postings = zip(*(batch.column(c).to_pylist()
+                     for c in ("term", "doc_id", "tf", "doc_len")))
+    assert sorted(whole, key=lambda r: r[:2]) == _reference_blobs(
+        postings, shards, 16
+    )
+    assert run([batch.slice(0, 0)]) == []
+
+
+@pytest.mark.parametrize(
+    "case", ["default", "salted", "salted_batch7", "empty_corpus"]
+)
+def test_compressed_postings_equal_reference(spark, case):
+    """build_compressed_postings == the plain-Python reference built
+    from the collected postings, row for row, with BLOB_SCHEMA; the
+    7-row Arrow batches make groups span batches."""
+    docs = [] if case == "empty_corpus" else synth_docs(150, 40, 23)
+    cfg = ix.IndexConfig(analyzer=SIMPLE)
+    if case.startswith("salted"):
+        cfg = ix.IndexConfig(
+            analyzer=SIMPLE, salt_df_threshold=5, num_salt_shards=4,
+            block_size=16,
+        )
+    idx = ix.build_index(
+        spark.createDataFrame(docs, "doc_id long, content string"), cfg
+    )
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    try:
+        if case == "salted_batch7":
+            spark.conf.set(key, "7")
+        blobs = build_compressed_postings(idx)
+        got = sorted(_blob_rows(blobs.collect()), key=lambda r: r[:2])
+    finally:
+        spark.conf.set(key, old)
+    assert blobs.schema == spark.createDataFrame([], BLOB_SCHEMA).schema
+    postings = [
+        (r["term"], r["doc_id"], r["tf"], r["doc_len"])
+        for r in idx.postings.collect()
+    ]
+    want = _reference_blobs(
+        postings, derive_num_salt_shards(idx), cfg.block_size
+    )
+    assert got == want
+    assert (len(got) == 0) == (case == "empty_corpus")
 
 
 def test_shard_skew_report_uniformity(spark):
