@@ -388,9 +388,9 @@ def collect_collection_stats(
     doc_stats: DataFrame, term_stats: DataFrame
 ) -> CollectionStats:
     """Collection scalars from MATERIALIZED doc_stats/term_stats tables
-    (the open-an-existing-index path — streaming/checkpoint readers).
-    ``build_index`` itself uses a cheaper derivation (sum(cf) +
-    docs.count()) that never forces the doc_stats join."""
+    (the open-an-existing-index path — streaming/bucketed readers).
+    Builds use ``derive_collection_stats`` instead, which never forces
+    the doc_stats join."""
     row = doc_stats.agg(
         F.count(F.lit(1)).alias("n"), F.sum("doc_len").alias("tot")
     ).collect()[0]
@@ -399,6 +399,23 @@ def collect_collection_stats(
         n_docs=int(row["n"] or 0),
         total_tokens=int(row["tot"] or 0),
         vocab_size=int(vocab),
+    )
+
+
+def derive_collection_stats(
+    term_stats: DataFrame, n_docs: int
+) -> CollectionStats:
+    """Collection scalars of a build in one action over its (small) term
+    table: total tokens == sum(cf) (sum of tf == sum of per-doc doc_len;
+    zero-token docs contribute 0 to both), vocab == term rows; ``n_docs``
+    is the caller's input row count."""
+    row = term_stats.agg(
+        F.count(F.lit(1)).alias("v"), F.sum("cf").alias("tot")
+    ).collect()[0]
+    return CollectionStats(
+        n_docs=n_docs,
+        total_tokens=int(row["tot"] or 0),
+        vocab_size=int(row["v"] or 0),
     )
 
 
@@ -423,8 +440,9 @@ def build_index(
     from footer metadata — or an already-persisted frame): the stats
     derivation issues one docs.count(). Builds that must survive a
     restart go through build_index_checkpointed, which writes the same
-    tables to disk stage by stage (it scans docs again for its lineage
-    fingerprint and for the sha projection)."""
+    tables to disk, each in one job, and on a rerun redoes only the
+    stages from the first one not finished (it scans docs again for its
+    lineage fingerprint and for the sha projection)."""
     cfg = cfg or IndexConfig()
     flat = derive_postings(docs, cfg.analyzer, id_col, content_col)
     if cache:
@@ -433,24 +451,11 @@ def build_index(
     term_stats = build_term_stats(flat)
     if cache:
         term_stats = term_stats.persist()
-    # Collection scalars WITHOUT forcing the doc_stats join: total
-    # tokens == sum(cf) (sum of tf == sum of per-doc doc_len, zero-token
-    # docs contribute 0 to both), vocab == term_stats row count — one
-    # action over the tiny term table (which also fills the flat-
-    # postings cache), plus a docs.count() (metadata-cheap on file
-    # sources). The old collect_collection_stats(doc_stats, ...) path
-    # dragged a full content sha2 scan + a postings-sized doc_id shuffle
-    # + a join into the build critical path just to produce these two
-    # scalars — measured as the build stage's scaling bottleneck at
-    # 8 -> 16 cores (doc_stats itself stays available lazily).
-    srow = term_stats.agg(
-        F.count(F.lit(1)).alias("v"), F.sum("cf").alias("tot")
-    ).collect()[0]
-    stats = CollectionStats(
-        n_docs=docs.count(),
-        total_tokens=int(srow["tot"] or 0),
-        vocab_size=int(srow["v"] or 0),
-    )
+    # Scalars WITHOUT forcing the doc_stats join (a content sha2 scan +
+    # a postings-sized doc_id shuffle, measured as the build's scaling
+    # bottleneck at 8 -> 16 cores); the term-table action also fills the
+    # flat-postings cache, and docs.count() is metadata-cheap on files.
+    stats = derive_collection_stats(term_stats, docs.count())
     return InvertedIndex(
         doc_stats=doc_stats,
         postings=flat,

@@ -5,26 +5,29 @@ reference: indexing/TrecDocIndexer.java:154-155) — a non-starter for a
 10^12-file corpus where a build is hours of cluster time and ANY restart
 must not redo finished work. This module adds what the reference lacks:
 
-- postings and doc_stats come from the same derivation as
-  ``build_index`` (operators/indexer.py ``derive_postings`` /
-  ``derive_doc_stats``): the flat postings are the one persisted table,
-  doc_stats and every slice read it, and it is unpersisted on every
+- postings, doc_stats and term_stats come from the same derivations as
+  ``build_index`` (operators/indexer.py ``derive_postings``,
+  ``derive_doc_stats``, ``build_term_stats``, ``derive_collection_stats``):
+  the flat postings are the one persisted table, every stage reads it,
+  no written table is read back, and the flat is unpersisted on every
   exit, so a build leaves nothing cached in the session;
-- the postings are written as ``num_slices`` term-hash slices
-  (pmod(xxhash64(term), num_slices)); each slice is an independent job
-  whose output lands in ``postings/slice=<i>/``;
+- each table is written once, by one job: ``doc_stats/``, then
+  ``postings/`` partitioned into ``num_slices`` term-hash slices
+  (``slice=<i>/`` = pmod(xxhash64(term), num_slices) — a read layout,
+  not a unit of resume), then ``term_stats/`` with ``stats.json``;
 - a JSON manifest records lineage (input fingerprint, config hash,
-  engine version) plus per-slice completion and per-stage metrics
-  (rows, seconds, docs/sec);
-- a restart verifies lineage, SKIPS completed slices, and finishes the
-  rest — the final table is byte-equivalent to a single-shot build;
+  slice count), the completed prefix of those three stages and each
+  stage's row count — nothing timing-dependent, so two builds of the
+  same input write byte-identical manifests;
+- a restart verifies lineage, SKIPS the completed prefix, and redoes
+  every stage from the first one not done. Spark's commit protocol makes
+  each stage's single write all-or-nothing, and a stage's write
+  overwrites its whole directory, so a crash mid-stage leaves nothing
+  behind that the rerun could read — the final tables equal a
+  single-shot build's;
 - changing the input or the config invalidates the manifest (fingerprint
   mismatch -> fresh build), so a stale checkpoint can never leak into a
   new index.
-
-Slicing by term hash (not by input split) keeps each slice a complete,
-mergeable postings subset: slices never overlap in terms, so "resume"
-is pure set union, no reconciliation.
 """
 
 from __future__ import annotations
@@ -43,11 +46,16 @@ from ..operators.indexer import (
     IndexConfig,
     InvertedIndex,
     build_term_stats,
+    derive_collection_stats,
     derive_doc_stats,
     derive_postings,
 )
 
 MANIFEST = "manifest.json"
+STAGES = ("doc_stats", "postings", "term_stats")
+# the on-disk postings columns, ``slice`` read from the partition paths;
+# declared so an empty index (no slice directory at all) still opens
+POSTINGS_SCHEMA = "term string, doc_id long, tf int, doc_len long, slice int"
 
 
 def _config_fingerprint(cfg: IndexConfig) -> str:
@@ -108,10 +116,9 @@ def build_index_checkpointed(
         out_dir/postings/slice=i/     parquet (term,doc_id,tf,doc_len)
         out_dir/term_stats/           parquet
         out_dir/stats.json            collection scalars
-        out_dir/manifest.json         lineage + completion + metrics
+        out_dir/manifest.json         lineage + completed stages + rows
     """
     cfg = cfg or IndexConfig()
-    spark = docs.sparkSession
     lineage = {
         "input": _input_fingerprint(docs, id_col, content_col),
         "config": _config_fingerprint(cfg),
@@ -122,83 +129,58 @@ def build_index_checkpointed(
         log(f"[checkpoint] lineage mismatch at {out_dir} — rebuilding")
         m = None
     if m is None:
-        m = {
-            "lineage": lineage,
-            "completed_stages": [],
-            "completed_slices": [],
-            "metrics": {},
-        }
+        m = {"lineage": lineage, "completed_stages": [], "metrics": {}}
+    # the manifest records the completed prefix of STAGES; every stage
+    # from the first one not done is redone
+    start = len(m["completed_stages"])
+    for name in STAGES[:start]:
+        log(f"[checkpoint] {name}: already complete, skipping")
+    if start == len(STAGES):
+        return m
+    n_docs = lineage["input"]["n_rows"]
 
-    def stage_done(name: str) -> bool:
-        return name in m["completed_stages"]
-
-    def record(stage: str, t0: float, rows: int, extra: dict | None = None):
-        dt = time.time() - t0
-        m["metrics"][stage] = {
-            "rows": rows,
-            "seconds": round(dt, 3),
-            "rows_per_sec": round(rows / dt, 1) if dt > 0 else None,
-            **(extra or {}),
-        }
-        _save_manifest(out_dir, m)
-        log(f"[checkpoint] {stage}: {rows} rows in {dt:.2f}s")
-
-    # the one parse: doc_stats and every slice read this persisted table;
-    # the build owns it and unpersists it on every exit
+    # the one parse: every stage reads this persisted table; the build
+    # owns it and unpersists it on every exit
     flat = derive_postings(docs, cfg.analyzer, id_col, content_col).persist()
-    try:
-        # ---- stage: doc_stats
-        if not stage_done("doc_stats"):
-            t0 = time.time()
-            ds = derive_doc_stats(docs, flat, id_col, content_col)
-            path = os.path.join(out_dir, "doc_stats")
-            ds.write.mode("overwrite").parquet(path)
-            n = spark.read.parquet(path).count()
-            m["completed_stages"].append("doc_stats")
-            record("doc_stats", t0, n, {"docs_per_sec_key": True})
-        else:
-            log("[checkpoint] doc_stats: already complete, skipping")
 
-        # ---- stage: postings, per term-hash slice
+    def write_doc_stats() -> int:
+        ds = derive_doc_stats(docs, flat, id_col, content_col)
+        ds.write.mode("overwrite").parquet(os.path.join(out_dir, "doc_stats"))
+        return n_docs  # the left join keeps exactly one row per input row
+
+    def write_postings() -> int:
+        # one job writes every slice; overwrite replaces the whole
+        # directory, so no slice of an earlier layout or crash survives
         slice_of = F.pmod(F.xxhash64("term"), F.lit(num_slices)).cast("int")
-        done = m["completed_slices"]
-        todo = [s for s in range(num_slices) if s not in done]
-        for s in todo:
-            t0 = time.time()
-            part = flat.filter(slice_of == s)
-            path = os.path.join(out_dir, "postings", f"slice={s}")
-            part.write.mode("overwrite").parquet(path)
-            n = spark.read.parquet(path).count()
-            m["completed_slices"].append(s)
-            record(f"postings_slice_{s}", t0, n)
-        if not todo:
-            log("[checkpoint] postings: all slices complete, skipping")
-    finally:
-        flat.unpersist()
-
-    # ---- stage: term_stats + collection stats (derived; cheap, last)
-    if not stage_done("term_stats"):
-        t0 = time.time()
-        all_postings = spark.read.parquet(os.path.join(out_dir, "postings"))
-        tstats = build_term_stats(all_postings)
-        path = os.path.join(out_dir, "term_stats")
-        tstats.write.mode("overwrite").parquet(path)
-        n = spark.read.parquet(path).count()
-        ds = spark.read.parquet(os.path.join(out_dir, "doc_stats"))
-        row = ds.agg(
-            F.count(F.lit(1)).alias("n"), F.sum("doc_len").alias("tot")
-        ).collect()[0]
-        stats = CollectionStats(
-            n_docs=int(row["n"] or 0),
-            total_tokens=int(row["tot"] or 0),
-            vocab_size=n,
+        (
+            flat.withColumn("slice", slice_of)
+            .write.mode("overwrite")
+            .partitionBy("slice")
+            .parquet(os.path.join(out_dir, "postings"))
         )
+        return flat.count()
+
+    def write_term_stats() -> int:
+        tstats = build_term_stats(flat)
+        tstats.write.mode("overwrite").parquet(
+            os.path.join(out_dir, "term_stats")
+        )
+        stats = derive_collection_stats(tstats, n_docs)
         with open(os.path.join(out_dir, "stats.json"), "w") as fh:
             json.dump(asdict(stats), fh)
-        m["completed_stages"].append("term_stats")
-        record("term_stats", t0, n)
-    else:
-        log("[checkpoint] term_stats: already complete, skipping")
+        return stats.vocab_size
+
+    writes = (write_doc_stats, write_postings, write_term_stats)
+    try:
+        for name, write in zip(STAGES[start:], writes[start:]):
+            t0 = time.time()
+            rows = write()
+            m["completed_stages"].append(name)
+            m["metrics"][name] = {"rows": rows}
+            _save_manifest(out_dir, m)
+            log(f"[checkpoint] {name}: {rows} rows in {time.time() - t0:.2f}s")
+    finally:
+        flat.unpersist()
     return m
 
 
@@ -208,15 +190,14 @@ def read_index(
     """Open a persisted index directory as an InvertedIndex handle."""
     with open(os.path.join(out_dir, "stats.json")) as fh:
         s = json.load(fh)
+    postings = spark.read.schema(POSTINGS_SCHEMA).parquet(
+        os.path.join(out_dir, "postings")
+    )
     return InvertedIndex(
         doc_stats=spark.read.parquet(os.path.join(out_dir, "doc_stats")),
-        postings=spark.read.parquet(os.path.join(out_dir, "postings")),
+        postings=postings,
         term_stats=spark.read.parquet(os.path.join(out_dir, "term_stats")),
-        stats=CollectionStats(
-            n_docs=s["n_docs"],
-            total_tokens=s["total_tokens"],
-            vocab_size=s["vocab_size"],
-        ),
+        stats=CollectionStats(**s),
         config=cfg or IndexConfig(),
     )
 

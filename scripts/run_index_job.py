@@ -15,7 +15,7 @@ Submit (the north-rule invocation shape):
 On a real cluster the SparkSession comes from spark-submit's conf
 (executors, memory, shuffle partitions); locally it falls back to
 local[$SPARK_GRAFT_CPUS]. The build is checkpoint-resumable: rerunning
-after a failure skips completed slices (plans/checkpoints.py).
+after a failure skips the completed stages (plans/checkpoints.py).
 """
 
 from __future__ import annotations
@@ -79,7 +79,7 @@ def main() -> None:
     )
     print(json.dumps({
         "stage": "build", "seconds": round(time.time() - t0, 2),
-        "metrics": manifest["metrics"],
+        "rows": {s: v["rows"] for s, v in manifest["metrics"].items()},
     }))
 
     if args.queries:

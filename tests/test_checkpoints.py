@@ -50,6 +50,34 @@ def test_corpus_deterministic(spark):
     assert any("uniq_" in r["content"] for r in a)
 
 
+def _quiet(_msg):
+    pass
+
+
+def _rows(df):
+    return sorted(map(tuple, df.collect()))
+
+
+def _fake_postings_crash(out_dir):
+    """Leave ``out_dir`` as a crash inside the postings stage would: the
+    manifest's completed prefix is ``["doc_stats"]``, one slice is gone
+    and the aborted write's ``postings/_temporary/`` is still there."""
+    import shutil
+
+    manifest_path = os.path.join(out_dir, "manifest.json")
+    with open(manifest_path) as fh:
+        m = json.load(fh)
+    m["completed_stages"] = ["doc_stats"]
+    with open(manifest_path, "w") as fh:
+        json.dump(m, fh)
+    postings = os.path.join(out_dir, "postings")
+    shutil.rmtree(os.path.join(postings, "slice=1"))
+    tmp = os.path.join(postings, "_temporary", "0")
+    os.makedirs(tmp)
+    with open(os.path.join(tmp, "part-00000.parquet"), "wb") as fh:
+        fh.write(b"half-written")
+
+
 def test_interrupted_build_resumes_identically(spark, docs, tmp_path):
     full_dir = str(tmp_path / "full")
     part_dir = str(tmp_path / "partial")
@@ -58,39 +86,31 @@ def test_interrupted_build_resumes_identically(spark, docs, tmp_path):
     cp.build_index_checkpointed(
         docs, full_dir, CFG, num_slices=4, log=logs.append
     )
-
-    # simulate a crash: run, then surgically mark slices 2,3 incomplete
-    # and delete their output (as if the job died mid-flight)
     cp.build_index_checkpointed(
         docs, part_dir, CFG, num_slices=4, log=logs.append
     )
-    manifest_path = os.path.join(part_dir, "manifest.json")
-    with open(manifest_path) as fh:
-        m = json.load(fh)
-    m["completed_slices"] = [0, 1]
-    m["completed_stages"] = ["doc_stats"]  # term_stats must rerun too
-    with open(manifest_path, "w") as fh:
-        json.dump(m, fh)
-    import shutil
-
-    shutil.rmtree(os.path.join(part_dir, "postings", "slice=2"))
-    shutil.rmtree(os.path.join(part_dir, "postings", "slice=3"))
-    shutil.rmtree(os.path.join(part_dir, "term_stats"))
+    _fake_postings_crash(part_dir)
+    before = _persisted_rdds(spark)
 
     logs.clear()
     cp.build_index_checkpointed(
         docs, part_dir, CFG, num_slices=4, log=logs.append
     )
-    # only slices 2,3 re-ran; doc_stats skipped
-    assert any("doc_stats: already complete" in l for l in logs)
-    assert any("postings_slice_2" in l for l in logs)
-    assert any("postings_slice_3" in l for l in logs)
-    assert not any("postings_slice_0" in l for l in logs)
+    # doc_stats skipped; postings and term_stats redone, in that order
+    assert logs[0] == "[checkpoint] doc_stats: already complete, skipping"
+    assert logs[1].startswith("[checkpoint] postings: ")
+    assert logs[2].startswith("[checkpoint] term_stats: ")
+    assert len(logs) == 3 and not any("skipping" in l for l in logs[1:])
+    assert not os.path.exists(os.path.join(part_dir, "postings", "_temporary"))
+    assert not _persisted_rdds(spark) - before
 
     assert _postings_map(spark, part_dir) == _postings_map(spark, full_dir)
     idx_a = cp.read_index(spark, full_dir, CFG)
     idx_b = cp.read_index(spark, part_dir, CFG)
     assert idx_a.stats == idx_b.stats
+    assert _rows(idx_a.postings) == _rows(idx_b.postings)
+    assert _rows(idx_a.doc_stats) == _rows(idx_b.doc_stats)
+    assert _rows(idx_a.term_stats) == _rows(idx_b.term_stats)
 
 
 def test_noop_rerun_skips_everything(spark, docs, tmp_path):
@@ -101,11 +121,97 @@ def test_noop_rerun_skips_everything(spark, docs, tmp_path):
     m = cp.build_index_checkpointed(
         docs, out, CFG, num_slices=2, log=logs.append
     )
-    assert any("already complete" in l for l in logs)
-    assert any("all slices complete" in l for l in logs)
-    assert sorted(m["completed_slices"]) == [0, 1]
-    # metrics were recorded with throughput
-    assert m["metrics"]["doc_stats"]["rows_per_sec"] is not None
+    assert logs == [
+        f"[checkpoint] {s}: already complete, skipping" for s in cp.STAGES
+    ]
+    assert m["completed_stages"] == list(cp.STAGES)
+    # per-stage row counts match the tables on disk
+    idx = cp.read_index(spark, out, CFG)
+    assert m["metrics"]["doc_stats"]["rows"] == idx.doc_stats.count() == 300
+    assert m["metrics"]["postings"]["rows"] == idx.postings.count()
+    assert m["metrics"]["term_stats"]["rows"] == idx.stats.vocab_size
+
+
+def test_manifest_is_deterministic(spark, docs, tmp_path):
+    """The manifest holds no timing: two builds of the same input into
+    two directories write byte-identical manifests."""
+    a, b = str(tmp_path / "a"), str(tmp_path / "b")
+    cp.build_index_checkpointed(docs, a, CFG, num_slices=2, log=_quiet)
+    cp.build_index_checkpointed(docs, b, CFG, num_slices=2, log=_quiet)
+    with open(os.path.join(a, "manifest.json"), "rb") as fa, open(
+        os.path.join(b, "manifest.json"), "rb"
+    ) as fb:
+        assert fa.read() == fb.read()
+
+
+def _alpha_docs(spark, n=40):
+    return spark.createDataFrame(
+        [(i, f"alpha beta gamma doc{i % 7} delta") for i in range(n)],
+        "doc_id long, content string",
+    )
+
+
+def test_rebuild_with_fewer_slices_drops_stale_slices(spark, tmp_path):
+    """Rebuilding a directory at a smaller ``num_slices`` (a lineage
+    mismatch) leaves no slice of the old layout behind: the rebuilt
+    postings and term_stats equal a fresh build's."""
+    docs = _alpha_docs(spark)
+    out, fresh = str(tmp_path / "resliced"), str(tmp_path / "fresh")
+    cp.build_index_checkpointed(docs, out, CFG, num_slices=4, log=_quiet)
+    logs: list[str] = []
+    cp.build_index_checkpointed(docs, out, CFG, num_slices=2, log=logs.append)
+    assert any("lineage mismatch" in l for l in logs)
+    cp.build_index_checkpointed(docs, fresh, CFG, num_slices=2, log=_quiet)
+    assert sorted(os.listdir(os.path.join(out, "postings"))) == sorted(
+        os.listdir(os.path.join(fresh, "postings"))
+    )
+    got = cp.read_index(spark, out, CFG)
+    want = cp.read_index(spark, fresh, CFG)
+    assert _rows(got.postings) == _rows(want.postings)
+    assert _rows(got.term_stats) == _rows(want.term_stats)
+    df = {r["term"]: r["df"] for r in got.term_stats.collect()}
+    assert got.postings.count() == 200 and df["alpha"] == 40
+
+
+def test_job_count_does_not_depend_on_num_slices(spark, tmp_path):
+    """Every table is one write job, so the build runs as many Spark
+    jobs at 16 slices as at 2."""
+    docs = _alpha_docs(spark)
+    sc = spark.sparkContext
+
+    def jobs(num_slices):
+        group = f"ckpt_jobs_{num_slices}"
+        sc.setJobGroup(group, group)
+        try:
+            cp.build_index_checkpointed(
+                docs, str(tmp_path / group), CFG,
+                num_slices=num_slices, log=_quiet,
+            )
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    n2, n16 = jobs(2), jobs(16)
+    assert n2 == n16, (n2, n16)
+
+
+def test_empty_corpus_builds_and_reads(spark, tmp_path):
+    """An empty corpus builds an index that opens and answers queries
+    with nothing (postings/ holds no slice directory at all), and a
+    rerun only skips."""
+    docs = spark.createDataFrame([], "doc_id long, content string")
+    out = str(tmp_path / "empty")
+    cp.build_index_checkpointed(docs, out, CFG, num_slices=2, log=_quiet)
+    idx = cp.read_index(spark, out, CFG)
+    assert idx.stats == ix.CollectionStats(0, 0, 0)
+    assert idx.postings.count() == 0
+    assert idx.postings.columns == ["term", "doc_id", "tf", "doc_len", "slice"]
+    assert idx.doc_stats.count() == 0 and idx.term_stats.count() == 0
+    qt = rt.queries_to_terms(spark, [("e1", "alpha beta")], SIMPLE)
+    assert rt.score_queries(idx, qt, k=5).count() == 0
+    logs: list[str] = []
+    cp.build_index_checkpointed(docs, out, CFG, num_slices=2, log=logs.append)
+    assert logs and all("skipping" in l for l in logs)
 
 
 def test_lineage_mismatch_rebuilds(spark, docs, tmp_path):
@@ -134,29 +240,23 @@ def _persisted_rdds(spark) -> set:
 
 
 def test_checkpointed_build_leaves_nothing_persisted(spark, tmp_path):
-    """The build owns what it persists: a fresh build, a resume of a
-    partly completed directory and a no-op rerun, all in one session,
-    leave no persisted RDD behind."""
-    docs = spark.createDataFrame(
-        [(i, f"alpha beta gamma doc{i % 7} delta") for i in range(40)],
-        "doc_id long, content string",
-    )
+    """The build owns what it persists: a fresh build, a resume after a
+    crash inside the postings stage and a no-op rerun, all in one
+    session, leave no persisted RDD behind."""
+    docs = _alpha_docs(spark)
     out = str(tmp_path / "owned")
     before = _persisted_rdds(spark)
 
     cp.build_index_checkpointed(docs, out, CFG, num_slices=2)
     assert not _persisted_rdds(spark) - before
 
-    manifest_path = os.path.join(out, "manifest.json")
-    with open(manifest_path) as fh:
-        m = json.load(fh)
-    m["completed_slices"] = [0]
-    m["completed_stages"] = []
-    with open(manifest_path, "w") as fh:
-        json.dump(m, fh)
+    _fake_postings_crash(out)
     logs: list[str] = []
     cp.build_index_checkpointed(docs, out, CFG, num_slices=2, log=logs.append)
-    assert any("postings_slice_1" in l for l in logs)  # really resumed
+    redone = [l for l in logs if "skipping" not in l]
+    assert [l.split(":")[0] for l in redone] == [
+        "[checkpoint] postings", "[checkpoint] term_stats"
+    ]
     assert not _persisted_rdds(spark) - before
 
     cp.build_index_checkpointed(docs, out, CFG, num_slices=2)
@@ -183,12 +283,9 @@ def test_checkpointed_english_matches_build_index(spark, tmp_path):
     cp.build_index_checkpointed(docs, out, cfg, num_slices=2)
     batch = ix.build_index(docs, cfg, cache=False)
 
-    def rows(df):
-        return sorted(map(tuple, df.collect()))
-
-    assert _postings_map(spark, out) == rows(batch.postings)
+    assert _postings_map(spark, out) == _rows(batch.postings)
     ds = spark.read.parquet(os.path.join(out, "doc_stats"))
-    assert rows(ds) == rows(batch.doc_stats)
+    assert _rows(ds) == _rows(batch.doc_stats)
     doc_len = {r["doc_id"]: r["doc_len"] for r in ds.collect()}
     assert doc_len[3] == 0 and doc_len[4] == 0
     assert all(doc_len[d] > 0 for d in (1, 2, 5))
