@@ -12286,7 +12286,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             salt_df_threshold=int(thr),
             num_salt_shards=4,
             block_size=idx.config.block_size,
-            num_term_partitions=idx.config.num_term_partitions,
         )
         salted = ix.InvertedIndex(
             doc_stats=idx.doc_stats,

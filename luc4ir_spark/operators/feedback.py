@@ -609,52 +609,32 @@ def xquad_rerank(
     run-sized join + aggregate): every relation after the one postings
     scan is (queries × k_cands) or (queries × terms)-sized; the k_out
     loop localCheckpoints its tiny state so the plan stays linear."""
-    from .retrieval import Similarity, idf_lucene
+    from .retrieval import (
+        Similarity,
+        _per_posting_score,
+        enrich_query_terms,
+        rank_topk,
+        score_fold,
+    )
 
-    sim = Similarity()
     qt = query_terms.select("qid", "term").distinct()
-    ts = index.term_stats.join(
-        F.broadcast(qt.select("term").distinct()), "term", "left_semi"
-    )
-    qte = qt.join(F.broadcast(ts), "term").withColumn(
-        "idf", idf_lucene(F.col("df"), index.stats.n_docs)
-    )
-    contrib = F.col("idf") * F.col("tf") / (
-        F.col("tf")
-        + F.lit(sim.k1)
-        * (
-            F.lit(1.0)
-            - F.lit(sim.b)
-            + F.lit(sim.b)
-            * F.col("doc_len")
-            / F.lit(float(index.stats.avgdl))
-        )
-    )
+    qte = enrich_query_terms(index, qt)
+    contrib = _per_posting_score(Similarity(), index.stats, qte.columns)
     pdt_all = index.postings.join(F.broadcast(qte), "term").select(
         "qid", "term", "doc_id", contrib.alias("s")
     )
-    run = (
-        pdt_all.groupBy("qid", "doc_id")
-        .agg(F.sum("s").alias("score"))
-        .withColumn(
-            "rank",
-            F.row_number().over(
-                Window.partitionBy("qid").orderBy(
-                    F.col("score").desc(), F.col("doc_id").asc()
-                )
-            ),
-        )
-        .filter(F.col("rank") <= int(k_cands))
-        .localCheckpoint(eager=False)
-    )
-    qsum = run.groupBy("qid").agg(F.sum("score").alias("_zs"))
+    run = rank_topk(
+        pdt_all.groupBy("qid", "doc_id").agg(score_fold("s").alias("score")),
+        k_cands,
+    ).localCheckpoint(eager=False)
+    qsum = run.groupBy("qid").agg(score_fold("score").alias("_zs"))
     rel = run.join(qsum, "qid").select(
         "qid", "doc_id", (F.col("score") / F.col("_zs")).alias("rel")
     )
     pdt = pdt_all.join(
         run.select("qid", "doc_id"), ["qid", "doc_id"], "left_semi"
     )
-    zt = pdt.groupBy("qid", "term").agg(F.sum("s").alias("_z"))
+    zt = pdt.groupBy("qid", "term").agg(score_fold("s").alias("_z"))
     pa = (
         pdt.join(zt.filter(F.col("_z") > 0), ["qid", "term"])
         .select(
@@ -672,7 +652,7 @@ def xquad_rerank(
         div = (
             pa.join(cov, ["qid", "term"])
             .groupBy("qid", "doc_id")
-            .agg(F.sum(F.col("pa") * F.col("c")).alias("_div"))
+            .agg(score_fold(F.col("pa") * F.col("c")).alias("_div"))
         )
         gained = (
             remaining.join(div, ["qid", "doc_id"], "left")
@@ -760,48 +740,28 @@ def pm2_rerank(
     then every step's relations are (queries × k_cands) or
     (queries × terms)-sized with localCheckpointed tiny state — the
     greedy depth k_out is a constant, never data-sized."""
-    from .retrieval import Similarity, idf_lucene
+    from .retrieval import (
+        Similarity,
+        _per_posting_score,
+        enrich_query_terms,
+        rank_topk,
+        score_fold,
+    )
 
-    sim = Similarity()
     qt = query_terms.select("qid", "term").distinct()
-    ts = index.term_stats.join(
-        F.broadcast(qt.select("term").distinct()), "term", "left_semi"
-    )
-    qte = qt.join(F.broadcast(ts), "term").withColumn(
-        "idf", idf_lucene(F.col("df"), index.stats.n_docs)
-    )
-    contrib = F.col("idf") * F.col("tf") / (
-        F.col("tf")
-        + F.lit(sim.k1)
-        * (
-            F.lit(1.0)
-            - F.lit(sim.b)
-            + F.lit(sim.b)
-            * F.col("doc_len")
-            / F.lit(float(index.stats.avgdl))
-        )
-    )
+    qte = enrich_query_terms(index, qt)
+    contrib = _per_posting_score(Similarity(), index.stats, qte.columns)
     pdt_all = index.postings.join(F.broadcast(qte), "term").select(
         "qid", "term", "doc_id", contrib.alias("s")
     )
-    run = (
-        pdt_all.groupBy("qid", "doc_id")
-        .agg(F.sum("s").alias("score"))
-        .withColumn(
-            "rank",
-            F.row_number().over(
-                Window.partitionBy("qid").orderBy(
-                    F.col("score").desc(), F.col("doc_id").asc()
-                )
-            ),
-        )
-        .filter(F.col("rank") <= int(k_cands))
-        .localCheckpoint(eager=False)
-    )
+    run = rank_topk(
+        pdt_all.groupBy("qid", "doc_id").agg(score_fold("s").alias("score")),
+        k_cands,
+    ).localCheckpoint(eager=False)
     pdt = pdt_all.join(
         run.select("qid", "doc_id"), ["qid", "doc_id"], "left_semi"
     )
-    zt = pdt.groupBy("qid", "term").agg(F.sum("s").alias("_z"))
+    zt = pdt.groupBy("qid", "term").agg(score_fold("s").alias("_z"))
     pa = (
         pdt.join(zt.filter(F.col("_z") > 0), ["qid", "term"])
         .select(
@@ -842,7 +802,7 @@ def pm2_rerank(
         scored = (
             contrib_da.groupBy("qid", "doc_id")
             .agg(
-                F.sum(
+                score_fold(
                     F.when(
                         F.col("term") == F.col("_bt"),
                         F.lit(float(lam)) * F.col("qt") * F.col("pa"),
@@ -882,7 +842,7 @@ def pm2_rerank(
         pa_pick = pa.join(
             pick.select("qid", "doc_id"), ["qid", "doc_id"], "left_semi"
         ).select("qid", "term", F.col("pa").alias("_pp"))
-        zpick = pa_pick.groupBy("qid").agg(F.sum("_pp").alias("_zp"))
+        zpick = pa_pick.groupBy("qid").agg(score_fold("_pp").alias("_zp"))
         seats = (
             seats.join(pa_pick, ["qid", "term"], "left")
             .join(F.broadcast(zpick), "qid", "left")

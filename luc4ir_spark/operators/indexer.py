@@ -60,7 +60,6 @@ class IndexConfig:
     num_salt_shards: int | None = None
     target_postings_per_shard: int = 250_000
     block_size: int = 128  # docs per impact block inside a posting blob
-    num_term_partitions: int = 32
 
 
 @dataclass(frozen=True)

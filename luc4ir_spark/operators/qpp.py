@@ -23,9 +23,10 @@ Out-of-vocabulary query terms carry no df/cf and are excluded from
 every statistic (Lucene has no idf for an empty TermsEnum); a query
 with NO in-vocabulary terms yields no row.
 
-Plan shape: pre-retrieval is a broadcast join of the tiny query-term
-set against the term DICTIONARY (vocab-sized, never corpus-sized) plus
-one groupBy(qid) — no postings touched. Post-retrieval is two
+Plan shape: pre-retrieval is the scorers' query side
+(``retrieval.enrich_query_terms``: the term DICTIONARY, vocab-sized and
+never broadcast, joined against the broadcast query-term set) plus one
+groupBy(qid) — no postings touched. Post-retrieval is two
 aggregates over the run (runs are queries × k sized), with the top-k
 mean folded into the same groupBy via a rank predicate — no window, no
 second scan.
@@ -35,7 +36,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from .indexer import InvertedIndex, idf_lucene
+from .indexer import InvertedIndex
+from .retrieval import enrich_query_terms
 
 
 def qpp_pre_retrieval(
@@ -45,10 +47,9 @@ def qpp_pre_retrieval(
     BM25 idf (ln(1 + (N - df + .5)/(df + .5))), matching the engine's
     scorer so the predictor and the run it predicts share one idf."""
     n = index.stats.n_docs
-    qt = query_terms.select("qid", "term").distinct()
-    joined = qt.join(
-        F.broadcast(index.term_stats.select("term", "df", "cf")), "term"
-    ).withColumn("idf", idf_lucene(F.col("df"), n))
+    joined = enrich_query_terms(
+        index, query_terms.select("qid", "term").distinct()
+    )
     scq_term = (F.lit(1.0) + F.log(F.col("cf").cast("double"))) * F.log(
         F.lit(1.0) + F.lit(float(n)) / F.col("df").cast("double")
     )
@@ -70,10 +71,9 @@ def qpp_post_retrieval(
     (qid, doc_id, rank, score) for the FULL candidate list (or a deep-k
     approximation of it). The top-``k`` prefix is selected by the run's
     own rank column — no re-sort."""
-    qt = query_terms.select("qid", "term").distinct()
     n_terms = (
-        qt.join(
-            F.broadcast(index.term_stats.select("term")), "term", "left_semi"
+        enrich_query_terms(
+            index, query_terms.select("qid", "term").distinct()
         )
         .groupBy("qid")
         .agg(F.count(F.lit(1)).cast("long").alias("n_terms"))

@@ -29,7 +29,7 @@ import math
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.analysis import AnalyzerConfig, analyze_text
@@ -268,6 +268,77 @@ def _per_posting_score(sim: Similarity, stats, qt_cols):
     raise ValueError(f"unknown similarity: {sim.kind}")
 
 
+def enrich_query_terms(
+    index: InvertedIndex, query_terms: DataFrame
+) -> DataFrame:
+    """The query side of every scorer: (qid, term[, weight, ...]) ->
+    (term, df, cf, qid, weight, ..., idf). One join of the term
+    dictionary against the broadcast query terms: the dictionary is the
+    streamed side and is never broadcast (pruning it with a semi-join
+    and broadcasting the pruned copy cost two more Spark jobs per
+    batch). Terms absent from the dictionary drop out (they have no df
+    and match no posting), and a missing weight column defaults to 1.0
+    per row."""
+    if "weight" not in query_terms.columns:
+        query_terms = query_terms.withColumn("weight", F.lit(1.0))
+    return (
+        index.term_stats.select("term", "df", "cf")
+        .join(F.broadcast(query_terms), "term")
+        .withColumn("idf", idf_lucene(F.col("df"), index.stats.n_docs))
+    )
+
+
+def sorted_contribs(contrib: str | Column = "contrib") -> Column:
+    """Aggregate: a group's per-posting contributions as one ascending
+    array — the input of the deterministic score fold (``score_fold``);
+    dismax reads its max and its sum off the same array."""
+    return F.array_sort(F.collect_list(contrib))
+
+
+def fold_sum(arr: Column) -> Column:
+    """Left-to-right sum of an array column, from 0.0."""
+    return F.aggregate(arr, F.lit(0.0), lambda acc, x: acc + x)
+
+
+def score_fold(contrib: str | Column = "contrib") -> Column:
+    """Aggregate: the per-(qid, doc) score of every ranked scorer. It
+    sums the contributions in SORTED VALUE order instead of
+    partition-encounter order. Two documents with identical (tf,
+    doc_len) profiles over the query terms have identical contribution
+    MULTISETS under every similarity, and their exact-real scores are
+    equal — but a plain F.sum folds each group in partial-aggregation
+    encounter order, so the two docs could land 1 ulp apart in either
+    direction and the raw-score rank tie-break became a per-layout coin
+    flip against the oracle (observed: dph at sf0.001, two
+    equal-profile docs rank-swapped). The sorted fold makes the score a
+    deterministic function of the multiset, so equal profiles tie
+    EXACTLY, the doc_id tie-break applies on both engines, and no score
+    depends on how the postings are partitioned. Cost: the group is at
+    most the query's term count (a handful) — the buffer is bounded by
+    query length, never corpus-sized."""
+    return fold_sum(sorted_contribs(contrib))
+
+
+def rank_topk(
+    scored: DataFrame, k: int, doc: str = "doc_id", *carry: str
+) -> DataFrame:
+    """The rank tail of every top-k scorer: per-qid rank by (score
+    desc, ``doc`` asc), cut at ``k`` -> (qid, doc, *carry, rank,
+    score). Equal scores go to the lower doc id, Lucene's
+    internal-docID tie order (reference comparator
+    retriever/ScoreDocComparator.java:15-21). Spark plans the cut as a
+    Partial/Final WindowGroupLimit pair, so each shard keeps at most k
+    rows per query before the shuffle."""
+    w = Window.partitionBy("qid").orderBy(
+        F.col("score").desc(), F.col(doc).asc()
+    )
+    return (
+        scored.withColumn("rank", F.row_number().over(w).cast("long"))
+        .filter(F.col("rank") <= int(k))
+        .select("qid", doc, *carry, "rank", "score")
+    )
+
+
 def score_queries(
     index: InvertedIndex,
     query_terms: DataFrame,
@@ -334,17 +405,7 @@ def score_queries(
     join, never a corpus scan.
     """
     sim = sim or Similarity()
-    if "weight" not in query_terms.columns:
-        query_terms = query_terms.withColumn("weight", F.lit(1.0))
-
-    # prune the term dictionary to the query's terms, then broadcast both
-    qt = query_terms
-    ts = index.term_stats.join(
-        F.broadcast(qt.select("term").distinct()), "term", "left_semi"
-    )
-    qt_enriched = qt.join(F.broadcast(ts), "term").withColumn(
-        "idf", idf_lucene(F.col("df"), index.stats.n_docs)
-    )
+    qt_enriched = enrich_query_terms(index, query_terms)
     if must_terms is not None:
         mt = must_terms.select("qid", "term").distinct()
         qt_enriched = qt_enriched.join(
@@ -352,31 +413,13 @@ def score_queries(
             ["qid", "term"],
             "left",
         ).withColumn("is_must", F.coalesce(F.col("_must"), F.lit(0)))
-    n_query_terms = qt.groupBy("qid").agg(
+    n_query_terms = query_terms.groupBy("qid").agg(
         F.count(F.lit(1)).alias("n_terms")
     )
 
     contrib = _per_posting_score(sim, index.stats, qt_enriched.columns)
-    # Deterministic per-document fold: sum the per-posting contributions
-    # in SORTED VALUE order instead of partition-encounter order. Two
-    # documents with identical (tf, doc_len) profiles over the query
-    # terms have identical contribution MULTISETS under every
-    # similarity, and their exact-real scores are equal — but a plain
-    # F.sum folds each group in partial-aggregation encounter order, so
-    # the two docs could land 1 ulp apart in either direction and the
-    # raw-score rank tie-break became a per-layout coin flip against
-    # the oracle (observed: dph at sf0.001, two equal-profile docs
-    # rank-swapped). The sorted fold makes the score a deterministic
-    # function of the multiset, so equal profiles tie EXACTLY and the
-    # doc_id tie-break applies on both engines. Cost: the group is at
-    # most the query's term count (a handful), and the bench A/B read
-    # identical times (0.85-1.1 s both) — the buffer is bounded by
-    # query length, never corpus-sized.
     agg_cols = [
-        F.expr(
-            "aggregate(array_sort(collect_list(contrib)), 0.0D,"
-            " (a, x) -> a + x)"
-        ).alias("score"),
+        score_fold().alias("score"),
         F.count(F.lit(1)).cast("long").alias("n_matched"),
     ]
     sel_cols = ["qid", "doc_id", contrib.alias("contrib")]
@@ -450,14 +493,7 @@ def score_queries(
             .distinct()
         )
         matched = matched.join(excl, ["qid", "doc_id"], "left_anti")
-    w = Window.partitionBy("qid").orderBy(
-        F.col("score").desc(), F.col("doc_id").asc()
-    )
-    return (
-        matched.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("qid", "doc_id", "rank", "score")
-    )
+    return rank_topk(matched, k)
 
 
 def _plain_scores(
@@ -471,15 +507,7 @@ def _plain_scores(
     ranking. ``restrict_pairs`` (qid, doc_id) limits the scan to a
     known candidate window BEFORE aggregation (the rescorer path), so
     the second pass touches |candidates| posting rows, not the corpus."""
-    qt = query_terms
-    if "weight" not in qt.columns:
-        qt = qt.withColumn("weight", F.lit(1.0))
-    ts = index.term_stats.join(
-        F.broadcast(qt.select("term").distinct()), "term", "left_semi"
-    )
-    qt_e = qt.join(F.broadcast(ts), "term").withColumn(
-        "idf", idf_lucene(F.col("df"), index.stats.n_docs)
-    )
+    qt_e = enrich_query_terms(index, query_terms)
     contrib = _per_posting_score(sim, index.stats, qt_e.columns)
     rows = index.postings.join(F.broadcast(qt_e), "term").select(
         "qid", "doc_id", contrib.alias("contrib")
@@ -490,7 +518,7 @@ def _plain_scores(
             ["qid", "doc_id"],
             "left_semi",
         )
-    return rows.groupBy("qid", "doc_id").agg(F.sum("contrib").alias("score"))
+    return rows.groupBy("qid", "doc_id").agg(score_fold().alias("score"))
 
 
 def ltr_features(
@@ -518,16 +546,9 @@ def ltr_features(
     per-posting contribution is computed side by side and a single
     map-side-combined groupBy aggregates them, so logging six features
     costs one scan, not six; the candidate cut is the usual per-qid
-    WindowGroupLimit."""
-    qt = query_terms
-    if "weight" not in qt.columns:
-        qt = qt.withColumn("weight", F.lit(1.0))
-    ts = index.term_stats.join(
-        F.broadcast(qt.select("term").distinct()), "term", "left_semi"
-    )
-    qt_e = qt.join(F.broadcast(ts), "term").withColumn(
-        "idf", idf_lucene(F.col("df"), index.stats.n_docs)
-    )
+    WindowGroupLimit. The three float features fold in sorted order
+    (``score_fold``), so none depends on the postings' partitioning."""
+    qt_e = enrich_query_terms(index, query_terms)
     contrib_b = _per_posting_score(
         Similarity(), index.stats, qt_e.columns
     )
@@ -544,23 +565,16 @@ def ltr_features(
         "doc_len",
     )
     feats = rows.groupBy("qid", "doc_id").agg(
-        F.sum("_cb").alias("bm25"),
-        F.sum("_cl").alias("lmdir"),
+        score_fold("_cb").alias("score"),
+        score_fold("_cl").alias("lmdir"),
         F.count(F.lit(1)).cast("long").alias("n_matched"),
         F.sum("tf").cast("long").alias("sum_tf"),
-        F.sum("idf").alias("idf_sum"),
+        score_fold("idf").alias("idf_sum"),
         F.max("doc_len").cast("long").alias("doc_len"),
     )
-    w = Window.partitionBy("qid").orderBy(
-        F.col("bm25").desc(), F.col("doc_id").asc()
-    )
-    return (
-        feats.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select(
-            "qid", "doc_id", "rank", "bm25", "lmdir",
-            "n_matched", "sum_tf", "idf_sum", "doc_len",
-        )
+    rest = ("lmdir", "n_matched", "sum_tf", "idf_sum", "doc_len")
+    return rank_topk(feats, k, "doc_id", *rest).select(
+        "qid", "doc_id", "rank", F.col("score").alias("bm25"), *rest
     )
 
 
@@ -598,14 +612,7 @@ def boosting_query(
             F.col("score") * F.lit(float(negative_boost)),
         ).otherwise(F.col("score")),
     )
-    w = Window.partitionBy("qid").orderBy(
-        F.col("score").desc(), F.col("doc_id").asc()
-    )
-    return (
-        demoted.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("qid", "doc_id", "rank", "score")
-    )
+    return rank_topk(demoted, k)
 
 
 def rescore_topk(
@@ -652,14 +659,7 @@ def rescore_topk(
         F.lit(float(weight_first)) * F.col("s_first")
         + F.lit(float(weight_second)) * F.coalesce(F.col("s_second"), F.lit(0.0)),
     )
-    w = Window.partitionBy("qid").orderBy(
-        F.col("score").desc(), F.col("doc_id").asc()
-    )
-    return (
-        combined.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("qid", "doc_id", "rank", "score")
-    )
+    return rank_topk(combined, k)
 
 
 def more_like_this(
@@ -1301,9 +1301,13 @@ def block_join_topk(
     Plan: the single-scan disjunctive scorer over the child postings,
     one integer-division projection to recover the parent (zero joins —
     the packed id IS the block mapping, like Lucene's contiguous
-    parent/child doc-id blocks), a map-side-combinable agg per
-    (qid, parent), and the usual top-k window."""
-    combiner = {"max": F.max, "total": F.sum, "avg": F.avg}.get(score_mode)
+    parent/child doc-id blocks), one agg per (qid, parent) — 'total'
+    and 'avg' through the sorted ``score_fold`` — and ``rank_topk``."""
+    combiner = {
+        "max": F.max("score"),
+        "total": score_fold("score"),
+        "avg": score_fold("score") / F.count(F.lit(1)),
+    }.get(score_mode)
     if combiner is None:
         raise ValueError(f"block_join_topk: unknown score_mode {score_mode!r}")
     child = _plain_scores(child_index, query_terms, sim or Similarity())
@@ -1312,16 +1316,9 @@ def block_join_topk(
             "parent_id", F.expr(f"doc_id DIV {int(parent_pack)}")
         )
         .groupBy("qid", "parent_id")
-        .agg(combiner("score").alias("score"))
+        .agg(combiner.alias("score"))
     )
-    w = Window.partitionBy("qid").orderBy(
-        F.col("score").desc(), F.col("parent_id").asc()
-    )
-    return (
-        rolled.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("qid", "parent_id", "rank", "score")
-    )
+    return rank_topk(rolled, k, "parent_id")
 
 
 def block_join_children_topk(
@@ -1347,27 +1344,14 @@ def block_join_children_topk(
     tiny, so AQE broadcasts it against a child table of any size; the
     top-k window is the usual per-qid WindowGroupLimit."""
     parents = _plain_scores(parent_index, query_terms, sim or Similarity())
-    j = parents.join(
+    j = parents.withColumnRenamed("doc_id", "parent_id").join(
         children.select(
-            F.col(parent_col).alias("doc_id"),
+            F.col(parent_col).alias("parent_id"),
             F.col(child_col).alias("child_id"),
         ),
-        "doc_id",
+        "parent_id",
     )
-    w = Window.partitionBy("qid").orderBy(
-        F.col("score").desc(), F.col("child_id").asc()
-    )
-    return (
-        j.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select(
-            "qid",
-            "child_id",
-            F.col("doc_id").alias("parent_id"),
-            "rank",
-            "score",
-        )
-    )
+    return rank_topk(j, k, "child_id", "parent_id")
 
 
 def common_terms_query(
@@ -1383,24 +1367,15 @@ def common_terms_query(
     candidate only if it matches at least one RARE query term; when a
     query has NO in-vocabulary rare terms the query degrades to the
     plain OR over its common terms (Lucene's rewrite when the
-    low-frequency clause is empty). Same single broadcast postings
-    scan as ``score_queries`` — the rare/common split rides the scan
-    as a flag, exactly like the MUST counter."""
+    low-frequency clause is empty). Built from the shared scoring
+    spine (``enrich_query_terms``, ``score_fold``, ``rank_topk``) over
+    one broadcast postings scan — the rare/common split rides the scan
+    as a flag, exactly like ``score_queries``' MUST counter. A query
+    with only out-of-vocabulary terms returns no rows."""
     sim = sim or Similarity()
-    qt = query_terms
-    if "weight" not in qt.columns:
-        qt = qt.withColumn("weight", F.lit(1.0))
-    ts = index.term_stats.join(
-        F.broadcast(qt.select("term").distinct()), "term", "left_semi"
-    )
     cutoff = float(max_df_ratio) * float(index.stats.n_docs)
-    qt_e = (
-        qt.join(F.broadcast(ts), "term")
-        .withColumn("idf", idf_lucene(F.col("df"), index.stats.n_docs))
-        .withColumn(
-            "is_rare",
-            (F.col("df") <= F.lit(cutoff)).cast("int"),
-        )
+    qt_e = enrich_query_terms(index, query_terms).withColumn(
+        "is_rare", (F.col("df") <= F.lit(cutoff)).cast("int")
     )
     has_rare = qt_e.groupBy("qid").agg(
         F.max("is_rare").alias("has_rare")
@@ -1411,7 +1386,7 @@ def common_terms_query(
         .select("qid", "doc_id", contrib.alias("contrib"), "is_rare")
         .groupBy("qid", "doc_id")
         .agg(
-            F.sum("contrib").alias("score"),
+            score_fold().alias("score"),
             F.sum("is_rare").alias("n_rare_matched"),
         )
         .join(F.broadcast(has_rare), "qid")
@@ -1419,14 +1394,7 @@ def common_terms_query(
             (F.col("has_rare") == 0) | (F.col("n_rare_matched") > 0)
         )
     )
-    w = Window.partitionBy("qid").orderBy(
-        F.col("score").desc(), F.col("doc_id").asc()
-    )
-    return (
-        matched.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("qid", "doc_id", "rank", "score")
-    )
+    return rank_topk(matched, k)
 
 
 def multi_phrase_query(
@@ -1685,23 +1653,15 @@ def explain_scores(
 ) -> DataFrame:
     """IndexSearcher.explain() parity: the per-(query, doc, TERM) score
     breakdown behind score_queries — tf, doc_len, df, idf and the
-    term's contribution, whose per-(qid, doc) sum IS the run score.
-    Same plan as scoring minus the final agg (postings ⋈ broadcast
-    enriched query terms); ``doc_ids`` optionally restricts to the docs
+    term's contribution; ``score_fold`` over a (qid, doc)'s
+    contributions IS the run score, bit for bit. It shares the
+    scorer's query side (``enrich_query_terms``) and posting scan, and
+    stops before the fold; ``doc_ids`` optionally restricts to the docs
     being explained (Lucene explains one doc at a time — pass the
     handful you care about and the filter prunes before the join
     output materializes)."""
     sim = sim or Similarity()
-    if "weight" not in query_terms.columns:
-        query_terms = query_terms.withColumn("weight", F.lit(1.0))
-    ts = index.term_stats.join(
-        F.broadcast(query_terms.select("term").distinct()),
-        "term",
-        "left_semi",
-    )
-    qt_enriched = query_terms.join(F.broadcast(ts), "term").withColumn(
-        "idf", idf_lucene(F.col("df"), index.stats.n_docs)
-    )
+    qt_enriched = enrich_query_terms(index, query_terms)
     postings = index.postings
     if doc_ids is not None:
         postings = postings.filter(F.col("doc_id").isin(list(doc_ids)))
@@ -1796,16 +1756,9 @@ def bm25f_score(
             ).alias("contrib"),
         )
         .groupBy("qid", "doc_id")
-        .agg(F.sum("contrib").alias("score"))
+        .agg(score_fold().alias("score"))
     )
-    w = Window.partitionBy("qid").orderBy(
-        F.col("score").desc(), F.col("doc_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("qid", "doc_id", "rank", "score")
-    )
+    return rank_topk(scored, k)
 
 
 def complete_prefix(
@@ -2030,45 +1983,29 @@ def dismax_topk(
     tie_breaker=0 is the pure max; tie_breaker=1 degenerates to the
     boolean-OR sum.
 
-    Plan shape: IDENTICAL single postings scan as score_queries (query
-    side broadcast, map-side partial agg) — only the aggregate differs:
-    max(contrib) and sum(contrib) ride the same groupBy, the dismax
-    combination is one projected expression, then the per-qid top-k
-    window. No second index pass, no extra shuffle."""
+    Plan shape: the shared scoring spine (``enrich_query_terms``, the
+    one broadcast postings scan, ``rank_topk``) — only the aggregate
+    differs: the group's contributions are collected once as a sorted
+    array (``sorted_contribs``), its last element is the max and its
+    sorted fold the sum, and the dismax combination is one projected
+    expression. No second index pass, no extra shuffle."""
     sim = sim or Similarity()
-    if "weight" not in query_terms.columns:
-        query_terms = query_terms.withColumn("weight", F.lit(1.0))
-    ts = index.term_stats.join(
-        F.broadcast(query_terms.select("term").distinct()),
-        "term",
-        "left_semi",
-    )
-    qt_enriched = query_terms.join(F.broadcast(ts), "term").withColumn(
-        "idf", idf_lucene(F.col("df"), index.stats.n_docs)
-    )
+    qt_enriched = enrich_query_terms(index, query_terms)
     contrib = _per_posting_score(sim, index.stats, qt_enriched.columns)
     tie = F.lit(float(tie_breaker))
+    mx = F.element_at("_cs", -1)
     matched = (
         index.postings.join(F.broadcast(qt_enriched), "term")
         .select("qid", "doc_id", contrib.alias("contrib"))
         .groupBy("qid", "doc_id")
-        .agg(F.max("contrib").alias("_mx"), F.sum("contrib").alias("_sm"))
+        .agg(sorted_contribs().alias("_cs"))
         .select(
             "qid",
             "doc_id",
-            (F.col("_mx") + tie * (F.col("_sm") - F.col("_mx"))).alias(
-                "score"
-            ),
+            (mx + tie * (fold_sum(F.col("_cs")) - mx)).alias("score"),
         )
     )
-    w = Window.partitionBy("qid").orderBy(
-        F.col("score").desc(), F.col("doc_id").asc()
-    )
-    return (
-        matched.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("qid", "doc_id", "rank", "score")
-    )
+    return rank_topk(matched, k)
 
 
 def wildcard_to_regex(pattern: str) -> str:
@@ -2188,9 +2125,7 @@ def synonym_topk(
     ).distinct()
 
     # group df = max df over members that exist in the dictionary
-    enriched = members.join(
-        F.broadcast(index.term_stats.select("term", "df")), "term"
-    )
+    enriched = enrich_query_terms(index, members)
     grp_df = enriched.groupBy("qid", "grp").agg(
         F.max("df").alias("grp_df")
     )
@@ -2202,31 +2137,19 @@ def synonym_topk(
         index.postings.join(F.broadcast(qt), "term")
         .groupBy("qid", "grp", "doc_id")
         .agg(
-            F.sum("tf").alias("tf_sum"),
+            F.sum("tf").alias("tf"),
             F.max("doc_len").alias("doc_len"),
             F.max("idf").alias("idf"),
         )
+        .withColumn("weight", F.lit(1.0))
     )
-    tf = F.col("tf_sum").cast("double")
-    dl = F.col("doc_len").cast("double")
-    norm = tf + F.lit(sim.k1) * (
-        F.lit(1.0 - sim.b) + F.lit(sim.b) * dl / F.lit(index.stats.avgdl)
-    )
+    contrib = _per_posting_score(sim, index.stats, blended.columns)
     scored = (
-        blended.select(
-            "qid", "doc_id", (F.col("idf") * tf / norm).alias("contrib")
-        )
+        blended.select("qid", "doc_id", contrib.alias("contrib"))
         .groupBy("qid", "doc_id")
-        .agg(F.sum("contrib").alias("score"))
+        .agg(score_fold().alias("score"))
     )
-    w = Window.partitionBy("qid").orderBy(
-        F.col("score").desc(), F.col("doc_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("qid", "doc_id", "rank", "score")
-    )
+    return rank_topk(scored, k)
 
 
 def collapse_results(
@@ -2342,14 +2265,7 @@ def function_score(
     rescored = joined.select(
         "qid", "doc_id", (F.col("score") * F.col("_boost")).alias("score")
     )
-    w = Window.partitionBy("qid").orderBy(
-        F.col("score").desc(), F.col("doc_id").asc()
-    )
-    return (
-        rescored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("qid", "doc_id", "rank", "score")
-    )
+    return rank_topk(rescored, k)
 
 
 def parse_boolean_query(
@@ -2749,14 +2665,7 @@ def proximity_rerank(
             F.log(F.lit(1.0) + F.exp(-F.col("min_dist"))),
         ).otherwise(F.lit(0.0)),
     )
-    w = Window.partitionBy("qid").orderBy(
-        F.col("score").desc(), F.col("doc_id").asc()
-    )
-    return (
-        boosted.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("qid", "doc_id", "rank", "score")
-    )
+    return rank_topk(boosted, k)
 
 
 def did_you_mean(
@@ -3223,25 +3132,16 @@ def join_query_scores(
     )
     agg = {
         "max": F.max("score"),
-        "total": F.sum("score"),
-        "avg": F.sum("score") / F.count(F.lit(1)),
+        "total": score_fold("score"),
+        "avg": score_fold("score") / F.count(F.lit(1)),
     }[score_mode]
     keys = (
         run.join(meta, "doc_id")
         .groupBy("qid", "_f")
-        .agg(agg.alias("_s"))
+        .agg(agg.alias("score"))
     )
-    w = Window.partitionBy("qid").orderBy(
-        F.col("_s").desc(), F.col("doc_id").asc()
-    )
-    return (
-        meta.join(F.broadcast(keys), "_f")
-        .withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= int(k))
-        .select(
-            "qid", "doc_id", "rank", F.round("_s", 4).alias("score")
-        )
-    )
+    ranked = rank_topk(meta.join(F.broadcast(keys), "_f"), k)
+    return ranked.withColumn("score", F.round("score", 4))
 
 
 def result_field_stats(
@@ -3963,14 +3863,7 @@ def ltr_apply_linear(
             "score"
         ),
     )
-    w = Window.partitionBy("qid").orderBy(
-        F.col("score").desc(), F.col("doc_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("qid", "doc_id", "rank", "score")
-    )
+    return rank_topk(scored, k)
 
 
 def condorcet_fuse(
@@ -4240,15 +4133,7 @@ def sdm_topk(
         + F.lit(w_u)
         * (F.col("s_u") + F.col("b_u") - F.col("n_u") * ln_dl)
     )
-    w = Window.partitionBy("qid").orderBy(
-        F.col("score").desc(), F.col("doc_id").asc()
-    )
-    return (
-        cand.select("qid", "doc_id", score.alias("score"))
-        .withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("qid", "doc_id", "rank", "score")
-    )
+    return rank_topk(cand.select("qid", "doc_id", score.alias("score")), k)
 
 
 def word_break_suggest(

@@ -87,8 +87,14 @@ from ..functions.codec import (
     encode_posting_list,
 )
 from ..functions.hashing import mix_shard_expr, mix_shard_np
-from .indexer import InvertedIndex, idf_lucene
-from .retrieval import Similarity
+from .indexer import InvertedIndex
+from .retrieval import (
+    Similarity,
+    _per_posting_score,
+    enrich_query_terms,
+    rank_topk,
+    score_fold,
+)
 
 BLOB_SCHEMA = (
     "term string, salt int, n_docs long, blob binary,"
@@ -427,15 +433,10 @@ def score_queries_wand(
     sim = sim or Similarity()
     if index.blobs is None:
         index.blobs = build_compressed_postings(index)
-    if "weight" not in query_terms.columns:
-        query_terms = query_terms.withColumn("weight", F.lit(1.0))
-    stats = index.stats
-    make_kernel = _make_kernel(sim, stats)
+    make_kernel = _make_kernel(sim, index.stats)
 
-    qt = (
-        query_terms.join(F.broadcast(index.term_stats), "term")
-        .withColumn("idf", idf_lucene(F.col("df"), stats.n_docs))
-        .select("qid", "term", "weight", "idf", "cf")
+    qt = enrich_query_terms(index, query_terms).select(
+        "qid", "term", "weight", "idf", "cf"
     )
     # blobs are uniformly doc-sharded at build time (every term's blob
     # for shard s holds exactly the docs with pmod(mix(doc_id), shards)
@@ -470,14 +471,7 @@ def score_queries_wand(
     shard_tops = joined.groupBy("qid", "salt").applyInPandas(
         run_shard, "qid string, doc_id long, score double"
     )
-    w = Window.partitionBy("qid").orderBy(
-        F.col("score").desc(), F.col("doc_id").asc()
-    )
-    return (
-        shard_tops.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("qid", "doc_id", "rank", "score")
-    )
+    return rank_topk(shard_tops, k)
 
 
 def shard_skew_report(blobs: DataFrame) -> DataFrame:
@@ -534,23 +528,11 @@ def impact_quantized_topk(
     sim = sim or Similarity()
     levels = float(2**bits - 1)
     denom = float(2**bits)
-    qt = query_terms.select("qid", "term").distinct()
-    ts = index.term_stats.join(
-        F.broadcast(qt.select("term").distinct()), "term", "left_semi"
+    qte = enrich_query_terms(
+        index, query_terms.select("qid", "term").distinct()
     )
-    qte = qt.join(F.broadcast(ts), "term").withColumn(
-        "idf", idf_lucene(F.col("df"), index.stats.n_docs)
-    )
-    contrib = F.col("idf") * F.col("tf") / (
-        F.col("tf")
-        + F.lit(sim.k1)
-        * (
-            F.lit(1.0)
-            - F.lit(sim.b)
-            + F.lit(sim.b)
-            * F.col("doc_len")
-            / F.lit(float(index.stats.avgdl))
-        )
+    contrib = _per_posting_score(
+        Similarity(k1=sim.k1, b=sim.b), index.stats, qte.columns
     )
     j = index.postings.join(F.broadcast(qte), "term").select(
         "qid", "term", "doc_id", contrib.alias("c")
@@ -577,12 +559,7 @@ def impact_quantized_topk(
     cut = qi.withColumn("_pr", F.row_number().over(w_imp)).filter(
         F.col("_pr") <= int(rho)
     )
-    scores = cut.groupBy("qid", "doc_id").agg(F.sum("dq").alias("score"))
-    w_rank = Window.partitionBy("qid").orderBy(
-        F.col("score").desc(), F.col("doc_id").asc()
+    scores = cut.groupBy("qid", "doc_id").agg(
+        score_fold("dq").alias("score")
     )
-    return (
-        scores.withColumn("rank", F.row_number().over(w_rank).cast("long"))
-        .filter(F.col("rank") <= int(k))
-        .select("qid", "doc_id", "rank", "score")
-    )
+    return rank_topk(scores, k)

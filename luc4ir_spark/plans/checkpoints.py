@@ -73,13 +73,17 @@ def _config_fingerprint(cfg: IndexConfig) -> str:
 
 
 def _input_fingerprint(docs: DataFrame, id_col: str, content_col: str) -> dict:
-    """Cheap but strong lineage: row count + XOR of row content hashes
-    (order- and partitioning-insensitive; XOR, not sum — sum of 64-bit
-    hashes overflows under ANSI mode)."""
+    """Cheap but strong lineage, one aggregate job: row count + SUM of
+    row content hashes (order- and partitioning-insensitive). The sum
+    runs in decimal(38,0), which holds 10^19 rows' worth of 64-bit
+    hashes, so it cannot overflow under ANSI mode; an XOR would let any
+    row that occurs an even number of times cancel out."""
     row = docs.select(
         F.count(F.lit(1)).alias("n"),
-        F.bit_xor(
-            F.xxhash64(F.col(id_col).cast("string"), F.col(content_col))
+        F.sum(
+            F.xxhash64(
+                F.col(id_col).cast("string"), F.col(content_col)
+            ).cast("decimal(38,0)")
         ).alias("h"),
     ).collect()[0]
     return {"n_rows": int(row["n"] or 0), "content_hash": int(row["h"] or 0)}

@@ -227,6 +227,27 @@ def test_lineage_mismatch_rebuilds(spark, docs, tmp_path):
     assert idx.stats.n_docs == 200
 
 
+def test_lineage_sees_rows_that_occur_twice(spark, tmp_path):
+    """Two inputs of the same size, each one row twice, have different
+    lineages: an order-insensitive hash fold that lets a repeated row
+    cancel out (XOR) gave both the same fingerprint, and the second
+    build skipped every stage and served the first corpus."""
+    out = str(tmp_path / "idx_twice")
+    schema = "doc_id long, content string"
+    first = spark.createDataFrame([(1, "alpha beta")] * 2, schema)
+    second = spark.createDataFrame([(2, "gamma delta")] * 2, schema)
+    cp.build_index_checkpointed(first, out, CFG, num_slices=2, log=_quiet)
+    logs: list[str] = []
+    cp.build_index_checkpointed(
+        second, out, CFG, num_slices=2, log=logs.append
+    )
+    assert any("lineage mismatch" in l for l in logs)
+    assert not any("skipping" in l for l in logs)
+    idx = cp.read_index(spark, out, CFG)
+    terms = {r["term"] for r in idx.term_stats.collect()}
+    assert terms == {"gamma", "delta"}
+
+
 def test_checkpointed_index_retrieves(spark, docs, tmp_path):
     out = str(tmp_path / "idx3")
     cp.build_index_checkpointed(docs, out, CFG, num_slices=2)

@@ -5,6 +5,7 @@ the posting codec."""
 import ast
 import hashlib
 import pathlib
+import re
 
 import numpy as np
 import pytest
@@ -677,3 +678,86 @@ def test_only_session_reads_environment():
             ):
                 readers.append(f"{path.relative_to(pkg)}:{node.lineno}")
     assert readers == []
+
+
+def test_one_rank_window_one_fold_one_query_side():
+    """The scoring spine is written once. (1) Only ``rank_topk`` and
+    ``collapse_results`` (which ranks per collapse key first and carries
+    the key) write a per-qid window ordered by score desc. (2) The
+    sorted score fold, array_sort over a collect_list of values,
+    appears once. (3) No join of the query side broadcasts the term
+    dictionary: the dictionary is the streamed side of
+    ``enrich_query_terms``' join."""
+
+    def is_score_desc(arg):
+        return (
+            isinstance(arg, ast.Call)
+            and isinstance(arg.func, ast.Attribute)
+            and arg.func.attr == "desc"
+            and ast.unparse(arg.func.value) == "F.col('score')"
+        )
+
+    def is_qid_window(call):
+        recv = call.func.value
+        return (
+            isinstance(recv, ast.Call)
+            and isinstance(recv.func, ast.Attribute)
+            and recv.func.attr == "partitionBy"
+            and [ast.unparse(a) for a in recv.args] == ["'qid'"]
+        )
+
+    def names(node):
+        return {n.id for n in ast.walk(node) if isinstance(n, ast.Name)}
+
+    windows, folds, broadcasts = [], [], []
+    # a sort of collected structs restores an order (token positions,
+    # line numbers); only a sort of collected values is a score fold
+    sql_fold = re.compile(r"array_sort\(\s*collect_list\((?!\s*struct)")
+
+    def is_fold(node):
+        if isinstance(node, ast.Constant) and isinstance(node.value, str):
+            return bool(sql_fold.search(node.value))
+        return (
+            isinstance(node, ast.Call)
+            and ast.unparse(node.func) == "F.array_sort"
+            and isinstance(node.args[0], ast.Call)
+            and ast.unparse(node.args[0].func) == "F.collect_list"
+            and "struct" not in ast.unparse(node.args[0])
+        )
+
+    pkg = pathlib.Path(ix.__file__).resolve().parents[1]
+    for path in sorted(pkg.rglob("*.py")):
+        rel, tree = path.relative_to(pkg), ast.parse(path.read_text())
+        folds += [f"{rel}:{n.lineno}" for n in ast.walk(tree) if is_fold(n)]
+        for top in tree.body:
+            if not isinstance(top, (ast.FunctionDef, ast.ClassDef)):
+                continue
+            query_side = {"query_terms"}
+            assigns = sorted(
+                (n for n in ast.walk(top) if isinstance(n, ast.Assign)),
+                key=lambda n: n.lineno,
+            )
+            for a in assigns:
+                if names(a.value) & query_side:
+                    for t in a.targets:
+                        query_side |= names(t)
+            for node in ast.walk(top):
+                if not (isinstance(node, ast.Call)
+                        and isinstance(node.func, ast.Attribute)):
+                    continue
+                where = f"{rel}:{node.lineno} {top.name}"
+                if (node.func.attr == "orderBy" and is_qid_window(node)
+                        and node.args and is_score_desc(node.args[0])
+                        and top.name not in ("rank_topk",
+                                             "collapse_results")):
+                    windows.append(where)
+                if node.func.attr == "join" and names(
+                        node.func.value) & query_side:
+                    for arg in node.args:
+                        if (isinstance(arg, ast.Call)
+                                and ast.unparse(arg.func) == "F.broadcast"
+                                and "term_stats" in ast.unparse(arg)):
+                            broadcasts.append(where)
+    assert windows == []
+    assert len(folds) == 1, folds
+    assert broadcasts == []

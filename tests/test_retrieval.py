@@ -3214,3 +3214,151 @@ def test_percolate_scored_matches_and_ranks(spark):
     for d in (1, 2):
         ranked = [q for _, q in sorted(by_doc[d])]
         assert ranked == ["qb", "qa"], d
+
+
+# ------------------------------------------- layout independence of scores
+
+_LAYOUT_VOCAB = [f"t{i}" for i in range(12)]
+_LAYOUT_QUERIES = [
+    ("l1", "t0 t1 t2 t3"),
+    ("l2", "t1 t3 t5 t7 t9"),
+    ("l3", "t0 t2 t4 t6 t6"),
+    ("l4", "t2 t3 t8 t10 t11"),
+]
+
+
+def _relaid(spark, idx, n_parts, seed):
+    """The same index with its postings in ``n_parts`` partitions; rows
+    in (term, doc_id) order, or shuffled with ``seed``."""
+    import dataclasses
+    import random
+
+    rows = sorted(
+        idx.postings.collect(), key=lambda r: (r["term"], r["doc_id"])
+    )
+    if seed is not None:
+        random.Random(seed).shuffle(rows)
+    post = spark.createDataFrame(
+        spark.sparkContext.parallelize(rows, n_parts), idx.postings.schema
+    )
+    return dataclasses.replace(idx, postings=post, blobs=None)
+
+
+@pytest.fixture(scope="module")
+def layouts(spark):
+    """Two layouts of one body index and one title index: postings in one
+    partition, and in seven partitions with shuffled rows. Docs draw
+    6-40 tokens from a 12-term Zipf-weighted vocabulary, so most of them
+    match three or more terms of every query."""
+    import random
+
+    rng = random.Random(11)
+    weights = [1.0 / (i + 1) for i in range(len(_LAYOUT_VOCAB))]
+    docs = [
+        (d, " ".join(rng.choices(_LAYOUT_VOCAB, weights,
+                                 k=rng.randint(6, 40))))
+        for d in range(160)
+    ]
+    cfg = ix.IndexConfig(analyzer=AnalyzerConfig(mode="simple"))
+    body = ix.build_index(
+        spark.createDataFrame(docs, "doc_id long, content string"), cfg
+    )
+    title = ix.build_index(
+        spark.createDataFrame(
+            [(d, " ".join(t.split()[:4])) for d, t in docs],
+            "doc_id long, content string",
+        ),
+        cfg,
+    )
+    qt = rt.queries_to_terms(spark, _LAYOUT_QUERIES, cfg.analyzer)
+    one = (_relaid(spark, body, 1, None), _relaid(spark, title, 1, None))
+    seven = (_relaid(spark, body, 7, 5), _relaid(spark, title, 7, 6))
+    return qt, one, seven
+
+
+def _layout_scorers(spark):
+    from luc4ir_spark.operators import feedback as fb
+    from luc4ir_spark.operators import qpp
+    from luc4ir_spark.operators import wand as wd
+
+    demote = spark.createDataFrame(
+        [("l1", "t3"), ("l2", "t5"), ("l4", "t8")], "qid string, term string"
+    )
+    syn = spark.createDataFrame(
+        [("t1", "t6"), ("t3", "t11"), ("t8", "t4")], "term string, syn string"
+    )
+    children = spark.createDataFrame(
+        [(d, d * 4 + j) for d in range(160) for j in range(2)],
+        "parent_id long, child_id long",
+    )
+    meta = spark.createDataFrame(
+        [(d, d % 9) for d in range(160)], "doc_id long, f long"
+    )
+    return {
+        "score_queries": lambda b, t, q: rt.score_queries(b, q),
+        "score_queries_dph": lambda b, t, q: rt.score_queries(
+            b, q, sim=rt.Similarity(kind="dph")),
+        "boosting_query": lambda b, t, q: rt.boosting_query(b, q, demote),
+        "rescore_topk": lambda b, t, q: rt.rescore_topk(
+            b, q, first_k=40, k=30),
+        "block_join_total": lambda b, t, q: rt.block_join_topk(
+            b, q, parent_pack=8, k=100, score_mode="total"),
+        "block_join_children": lambda b, t, q: rt.block_join_children_topk(
+            b, q, children, k=400),
+        "ltr_features": lambda b, t, q: rt.ltr_features(b, q),
+        "common_terms": lambda b, t, q: rt.common_terms_query(
+            b, q, max_df_ratio=0.5),
+        "dismax_topk": lambda b, t, q: rt.dismax_topk(
+            b, q, tie_breaker=0.3),
+        "bm25f_score": lambda b, t, q: rt.bm25f_score(
+            {"body": b, "title": t}, q),
+        "synonym_topk": lambda b, t, q: rt.synonym_topk(b, q, syn),
+        "join_query_total": lambda b, t, q: rt.join_query_scores(
+            b, q, meta, "f", score_mode="total", k=100),
+        "explain_scores": lambda b, t, q: rt.explain_scores(b, q),
+        "xquad_rerank": lambda b, t, q: fb.xquad_rerank(
+            b, q, k_cands=12, k_out=4),
+        "pm2_rerank": lambda b, t, q: fb.pm2_rerank(
+            b, q, k_cands=12, k_out=4),
+        "impact_quantized_topk": lambda b, t, q: wd.impact_quantized_topk(
+            b, q, k=100, rho=300),
+        "score_queries_wand": lambda b, t, q: wd.score_queries_wand(
+            b, q, k=200),
+        "qpp_pre": lambda b, t, q: qpp.qpp_pre_retrieval(b, q),
+        "qpp_post": lambda b, t, q: qpp.qpp_post_retrieval(
+            rt.score_queries(b, q), q, b, k=5),
+    }
+
+
+@pytest.mark.parametrize("name", [
+    "score_queries", "score_queries_dph", "boosting_query", "rescore_topk",
+    "block_join_total", "block_join_children", "ltr_features",
+    "common_terms", "dismax_topk", "bm25f_score", "synonym_topk",
+    "join_query_total", "explain_scores", "xquad_rerank", "pm2_rerank",
+    "impact_quantized_topk", "score_queries_wand", "qpp_pre", "qpp_post",
+])
+def test_scores_do_not_depend_on_postings_layout(spark, layouts, name):
+    """Every BM25-family scorer gives bit-identical scores and equal
+    ranks whether the postings sit in one partition in (term, doc_id)
+    order or in seven partitions in shuffled order: a float sum folded
+    in partition-encounter order moves by an ulp between the two and
+    reorders near-ties."""
+    qt, one, seven = layouts
+    fn = _layout_scorers(spark)[name]
+    a = sorted(map(tuple, fn(*one, qt).collect()))
+    b = sorted(map(tuple, fn(*seven, qt).collect()))
+    assert len(a) > 0
+    assert a == b
+
+
+def test_all_oov_topic_returns_no_rows(spark, layouts):
+    from luc4ir_spark.operators import feedback as fb
+
+    _, (body, _title), _ = layouts
+    qt = rt.queries_to_terms(
+        spark, [("oov", "zzznotaterm qqqnotaterm")],
+        AnalyzerConfig(mode="simple"),
+    )
+    assert rt.dismax_topk(body, qt).count() == 0
+    assert rt.common_terms_query(body, qt).count() == 0
+    assert fb.xquad_rerank(body, qt).count() == 0
