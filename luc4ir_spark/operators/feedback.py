@@ -228,9 +228,7 @@ def expand_query(
     (qid, term, weight) for a re-retrieval pass with
     retrieval.score_queries."""
     orig = query_terms.select("qid", "term").distinct()
-    all_terms = rlm.join(
-        F.broadcast(term_stats.select("term", "df")), "term"
-    ).withColumn(
+    all_terms = rlm.join(term_stats.select("term", "df"), "term").withColumn(
         "wtidf", F.col("wt") * F.log(F.lit(float(n_docs)) / F.col("df"))
     )
     z = all_terms.groupBy("qid").agg(F.sum("wtidf").alias("z"))
@@ -291,7 +289,7 @@ def rocchio_expand(
     n = float(index.stats.n_docs)
     dt = (
         index.postings.join(top, "doc_id")
-        .join(F.broadcast(index.term_stats.select("term", "df")), "term")
+        .join(index.term_stats.select("term", "df"), "term")
         .select(
             "qid",
             "term",
@@ -357,7 +355,7 @@ def bo1_expand(
     of `rocchio_expand`/`rm3_interpolate`.
 
     Plan shape: ONE postings join against the pool (pool-sized
-    output), the (term, cf) dictionary broadcast, a per-qid window
+    output), the (term, cf) dictionary join, a per-qid window
     over pool-vocabulary-sized relations. Corpus scanned once."""
     ln2 = math.log(2.0)
     top = run.filter(F.col("rank") <= int(num_top_docs)).select(
@@ -376,9 +374,9 @@ def bo1_expand(
         / F.lit(ln2)
         + F.log(F.lit(1.0) + lam) / F.lit(ln2)
     )
-    scored = pool.join(
-        F.broadcast(index.term_stats.select("term", "cf")), "term"
-    ).select("qid", "term", "tf_x", w_t.alias("weight"))
+    scored = pool.join(index.term_stats.select("term", "cf"), "term").select(
+        "qid", "term", "tf_x", w_t.alias("weight")
+    )
     w = Window.partitionBy("qid").orderBy(
         F.round("weight", 4).desc(), F.col("term").asc()
     )
@@ -449,7 +447,7 @@ def query_clarity(
     """F6: clarity = KL(RLM || collection LM), collection model
     cf/total (reference: feedback/RelevanceModelIId.java:136-160)."""
     return (
-        rlm.join(F.broadcast(term_stats.select("term", "cf")), "term")
+        rlm.join(term_stats.select("term", "cf"), "term")
         .withColumn("p_coll", F.col("cf") / F.lit(float(total_tokens)))
         .groupBy("qid")
         .agg(
@@ -619,7 +617,7 @@ def xquad_rerank(
 
     qt = query_terms.select("qid", "term").distinct()
     qte = enrich_query_terms(index, qt)
-    contrib = _per_posting_score(Similarity(), index.stats, qte.columns)
+    contrib = _per_posting_score(Similarity(), index.stats)
     pdt_all = index.postings.join(F.broadcast(qte), "term").select(
         "qid", "term", "doc_id", contrib.alias("s")
     )
@@ -750,7 +748,7 @@ def pm2_rerank(
 
     qt = query_terms.select("qid", "term").distinct()
     qte = enrich_query_terms(index, qt)
-    contrib = _per_posting_score(Similarity(), index.stats, qte.columns)
+    contrib = _per_posting_score(Similarity(), index.stats)
     pdt_all = index.postings.join(F.broadcast(qte), "term").select(
         "qid", "term", "doc_id", contrib.alias("s")
     )

@@ -666,21 +666,15 @@ def term_max_contrib(
 
     One map-side-combined max(struct) over the postings + a
     TakeOrderedAndProject — corpus-scale trivial."""
-    contrib = idf_lucene(F.col("df"), index.stats.n_docs) * F.col(
-        "tf"
-    ) / (
-        F.col("tf")
-        + F.lit(float(k1))
-        * (
-            F.lit(1.0)
-            - F.lit(float(b))
-            + F.lit(float(b))
-            * F.col("doc_len")
-            / F.lit(float(index.stats.avgdl))
-        )
+    from .retrieval import SPARK_MATH, Similarity, kernel_contrib
+
+    contrib = kernel_contrib(
+        Similarity(k1=float(k1), b=float(b)), index.stats, SPARK_MATH,
+        F.col("tf").cast("double"), F.col("doc_len").cast("double"),
+        F.lit(1.0), idf_lucene(F.col("df"), index.stats.n_docs), None,
     )
     rows = index.postings.join(
-        F.broadcast(index.term_stats.select("term", "df")), "term"
+        index.term_stats.select("term", "df"), "term"
     ).select("term", "df", F.struct(contrib.alias("c"), "doc_id").alias("_s"))
     agg = (
         rows.groupBy("term", "df")

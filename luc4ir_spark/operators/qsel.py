@@ -7,9 +7,10 @@ window over the analyzed verbose query (desc field), score each window
 by the mean idf of its terms, and keep the argmax window as the reduced
 query.
 
-Spark shape: posexplode the term arrays, broadcast-join df stats
-(query-side is tiny), frame-window average, per-qid argmax — one pass
-for ALL queries instead of the reference's per-query loop.
+Spark shape: posexplode the term arrays, join the df stats (unhinted:
+the dictionary is vocab-sized, so AQE broadcasts it only while it is
+small), frame-window average, per-qid argmax — one pass for ALL queries
+instead of the reference's per-query loop.
 """
 
 from __future__ import annotations
@@ -36,7 +37,7 @@ def select_verbose_query_terms(
     )
     idf = F.log(F.lit(float(n_docs)) / F.col("df"))
     with_idf = pos.join(
-        F.broadcast(term_stats.select("term", "df")), "term", "left"
+        term_stats.select("term", "df"), "term", "left"
     ).withColumn("idf", F.coalesce(idf, F.lit(0.0)))
 
     frame = (

@@ -26,8 +26,8 @@ reference comparator retriever/ScoreDocComparator.java:15-21).
 from __future__ import annotations
 
 import math
-
 from dataclasses import dataclass
+from types import SimpleNamespace
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -75,39 +75,54 @@ def queries_to_terms(
     ).groupBy("qid", "term").agg(F.sum("weight").alias("weight"))
 
 
-def _per_posting_score(sim: Similarity, stats, qt_cols):
+# the similarities the block-max WAND kernel evaluates too, written once
+# in ``kernel_contrib``; its math namespace is SPARK_MATH or numpy itself
+KERNEL_KINDS = ("bm25", "lmdir", "lmjm")
+SPARK_MATH = SimpleNamespace(
+    log=F.log, maximum=lambda a, b: F.greatest(F.lit(a), F.lit(b))
+)
+
+
+def _bm25_norm(tf, dl, sim: Similarity, stats):
+    """BM25's saturation denominator tf + k1*((1-b) + b*dl/avgdl)."""
+    return tf + sim.k1 * ((1.0 - sim.b) + sim.b * dl / stats.avgdl)
+
+
+def kernel_contrib(sim: Similarity, stats, m, tf, dl, weight, idf, cf):
+    """One (query-term, posting) contribution under a ``KERNEL_KINDS``
+    similarity. The double operands are Spark Columns or numpy arrays
+    and floats alike, and ``m`` supplies their ``log`` and ``maximum``,
+    so every engine runs the same float64 operations in the same order."""
+    if sim.kind not in KERNEL_KINDS:
+        raise ValueError(f"similarity {sim.kind!r} is not in {KERNEL_KINDS}")
+    if sim.kind == "bm25":
+        return weight * idf * tf / _bm25_norm(tf, dl, sim, stats)
+    p_c = cf / float(stats.total_tokens)
+    if sim.kind == "lmdir":
+        # Lucene LMDirichletSimilarity (public formula):
+        # log(1 + tf/(mu*P(t|C))) + log(mu/(dl+mu)), floored at 0 per term
+        raw = m.log(1.0 + tf / (sim.mu * p_c)) + m.log(sim.mu / (dl + sim.mu))
+        return weight * m.maximum(raw, 0.0)
+    # Lucene LMJelinekMercerSimilarity: log(1 + ((1-l)/l)*(tf/dl)/P(t|C))
+    return weight * m.log(1.0 + ((1.0 - sim.lam) / sim.lam) * (tf / dl) / p_c)
+
+
+def _per_posting_score(sim: Similarity, stats):
     """Column expression for one (query-term, posting) pair's contribution."""
     tf = F.col("tf").cast("double")
     dl = F.col("doc_len").cast("double")
     w = F.col("weight")
-    if sim.kind == "bm25":
-        norm = tf + F.lit(sim.k1) * (
-            F.lit(1.0 - sim.b) + F.lit(sim.b) * dl / F.lit(stats.avgdl)
+    if sim.kind in KERNEL_KINDS:
+        return kernel_contrib(
+            sim, stats, SPARK_MATH, tf, dl, w, F.col("idf"),
+            F.col("cf").cast("double"),
         )
-        return w * F.col("idf") * tf / norm
     if sim.kind == "bm25plus":
         # BM25+ (Lv & Zhai CIKM'11): add delta AFTER the saturation so
         # long documents can't drive a matching term's contribution
         # below delta*idf — fixes BM25's over-penalization of length
-        norm = tf + F.lit(sim.k1) * (
-            F.lit(1.0 - sim.b) + F.lit(sim.b) * dl / F.lit(stats.avgdl)
-        )
+        norm = _bm25_norm(tf, dl, sim, stats)
         return w * F.col("idf") * (tf / norm + F.lit(sim.delta))
-    if sim.kind == "lmdir":
-        # Lucene LMDirichletSimilarity (public formula):
-        # log(1 + tf/(mu*P(t|C))) + log(mu/(dl+mu)), floored at 0 per term
-        p_c = F.col("cf").cast("double") / F.lit(float(stats.total_tokens))
-        raw = F.log(F.lit(1.0) + tf / (F.lit(sim.mu) * p_c)) + F.log(
-            F.lit(sim.mu) / (dl + F.lit(sim.mu))
-        )
-        return w * F.greatest(raw, F.lit(0.0))
-    if sim.kind == "lmjm":
-        # Lucene LMJelinekMercerSimilarity: log(1 + ((1-l)/l)*(tf/dl)/P(t|C))
-        p_c = F.col("cf").cast("double") / F.lit(float(stats.total_tokens))
-        return w * F.log(
-            F.lit(1.0)
-            + F.lit((1.0 - sim.lam) / sim.lam) * (tf / dl) / p_c
-        )
     if sim.kind == "classic":
         # Lucene ClassicSimilarity (TFIDFSimilarity): sqrt-tf,
         # idf = 1 + ln((N+1)/(df+1)) SQUARED (query idf x field idf),
@@ -123,14 +138,19 @@ def _per_posting_score(sim: Similarity, stats, qt_cols):
     # result — is identical cross-engine; a native log2() may round
     # differently from ln()/ln(2) by an ulp.
     ln2 = F.lit(math.log(2.0))
+    # DFR/IB normalization H2 (dfr_inl2, ib_ll, spl, pl2) and the IB
+    # LambdaDF (ib_ll, spl)
+    tfn = tf * F.log(
+        F.lit(1.0) + F.lit(sim.c) * F.lit(stats.avgdl) / dl
+    ) / ln2
+    lam_df = (F.col("df").cast("double") + F.lit(1.0)) / F.lit(
+        float(stats.n_docs) + 1.0
+    )
     if sim.kind == "dfr_inl2":
         # DFR I(n)L2 (Amati & van Rijsbergen TOIS'02; the public
         # Lucene DFRSimilarity(BasicModelIn, AfterEffectL,
         # NormalizationH2) formula): tfn = tf*log2(1 + c*avgdl/dl),
         # score = tfn/(tfn+1) * log2((N+1)/(df+0.5))
-        tfn = tf * F.log(
-            F.lit(1.0) + F.lit(sim.c) * F.lit(stats.avgdl) / dl
-        ) / ln2
         gain = F.log(
             F.lit(float(stats.n_docs) + 1.0)
             / (F.col("df").cast("double") + F.lit(0.5))
@@ -141,12 +161,6 @@ def _per_posting_score(sim: Similarity, stats, qt_cols):
         # SIGIR'10; Lucene IBSimilarity(DistributionLL, LambdaDF,
         # NormalizationH2)): tfn as above, lambda = (df+1)/(N+1),
         # score = -log(lambda/(lambda+tfn)) = log(1 + tfn/lambda)
-        tfn = tf * F.log(
-            F.lit(1.0) + F.lit(sim.c) * F.lit(stats.avgdl) / dl
-        ) / ln2
-        lam_df = (F.col("df").cast("double") + F.lit(1.0)) / F.lit(
-            float(stats.n_docs) + 1.0
-        )
         return w * F.log(F.lit(1.0) + tfn / lam_df)
     if sim.kind == "boolean":
         # Lucene BooleanSimilarity: score = query boost per matched
@@ -165,14 +179,8 @@ def _per_posting_score(sim: Similarity, stats, qt_cols):
         # The ==1.0 guard compares the COMPUTED double on both engines
         # (not df==N), so an (N)/(N+1) that rounds to 1.0 at extreme N
         # branches identically. Arithmetic shape mirrors the oracle.
-        tfn = tf * F.log(
-            F.lit(1.0) + F.lit(sim.c) * F.lit(stats.avgdl) / dl
-        ) / ln2
-        lam_raw = (F.col("df").cast("double") + F.lit(1.0)) / F.lit(
-            float(stats.n_docs) + 1.0
-        )
-        lam_spl = F.when(lam_raw == F.lit(1.0), F.lit(0.99)).otherwise(
-            lam_raw
+        lam_spl = F.when(lam_df == F.lit(1.0), F.lit(0.99)).otherwise(
+            lam_df
         )
         return w * -F.log(
             (F.pow(lam_spl, tfn / (tfn + F.lit(1.0))) - lam_spl)
@@ -189,9 +197,6 @@ def _per_posting_score(sim: Similarity, stats, qt_cols):
         # Negative contributions for common terms (lambda > tfn) are
         # kept, as in Terrier. Arithmetic shape mirrors the oracle SQL
         # term-for-term (IEEE addition is order-sensitive).
-        tfn = tf * F.log(
-            F.lit(1.0) + F.lit(sim.c) * F.lit(stats.avgdl) / dl
-        ) / ln2
         lam_p = F.col("cf").cast("double") / F.lit(float(stats.n_docs))
         two_pi = F.lit(2.0 * math.pi)
         num = (
@@ -258,10 +263,10 @@ def _per_posting_score(sim: Similarity, stats, qt_cols):
         # Axiomatic F2EXP (Fang & Zhai SIGIR'05; Lucene
         # AxiomaticF2EXP, s=0.5, k=0.35):
         # score = tf/(tf + s + s*dl/avgdl) * ((N+1)/df)^k
-        tfn = tf / (
+        sat = tf / (
             tf + F.lit(sim.s) + F.lit(sim.s) * dl / F.lit(stats.avgdl)
         )
-        return w * tfn * F.pow(
+        return w * sat * F.pow(
             F.lit(float(stats.n_docs) + 1.0) / F.col("df").cast("double"),
             F.lit(sim.k_ax),
         )
@@ -315,7 +320,9 @@ def score_fold(contrib: str | Column = "contrib") -> Column:
     EXACTLY, the doc_id tie-break applies on both engines, and no score
     depends on how the postings are partitioned. Cost: the group is at
     most the query's term count (a handful) — the buffer is bounded by
-    query length, never corpus-sized."""
+    query length, never corpus-sized. The block-max WAND kernel
+    (``wand.fold_by_doc``) is the fold's second user: it sums each
+    doc's contributions in the same order, so its scores equal these."""
     return fold_sum(sorted_contribs(contrib))
 
 
@@ -417,7 +424,7 @@ def score_queries(
         F.count(F.lit(1)).alias("n_terms")
     )
 
-    contrib = _per_posting_score(sim, index.stats, qt_enriched.columns)
+    contrib = _per_posting_score(sim, index.stats)
     agg_cols = [
         score_fold().alias("score"),
         F.count(F.lit(1)).cast("long").alias("n_matched"),
@@ -508,7 +515,7 @@ def _plain_scores(
     known candidate window BEFORE aggregation (the rescorer path), so
     the second pass touches |candidates| posting rows, not the corpus."""
     qt_e = enrich_query_terms(index, query_terms)
-    contrib = _per_posting_score(sim, index.stats, qt_e.columns)
+    contrib = _per_posting_score(sim, index.stats)
     rows = index.postings.join(F.broadcast(qt_e), "term").select(
         "qid", "doc_id", contrib.alias("contrib")
     )
@@ -549,11 +556,9 @@ def ltr_features(
     WindowGroupLimit. The three float features fold in sorted order
     (``score_fold``), so none depends on the postings' partitioning."""
     qt_e = enrich_query_terms(index, query_terms)
-    contrib_b = _per_posting_score(
-        Similarity(), index.stats, qt_e.columns
-    )
+    contrib_b = _per_posting_score(Similarity(), index.stats)
     contrib_l = _per_posting_score(
-        Similarity(kind="lmdir", mu=mu), index.stats, qt_e.columns
+        Similarity(kind="lmdir", mu=mu), index.stats
     )
     rows = index.postings.join(F.broadcast(qt_e), "term").select(
         "qid",
@@ -733,7 +738,7 @@ def knn_classify(
     )
     qt = (
         index.postings.join(F.broadcast(tid), "doc_id", "left_semi")
-        .join(F.broadcast(index.term_stats.select("term", "df")), "term")
+        .join(index.term_stats.select("term", "df"), "term")
         .withColumn("_rn", F.row_number().over(wsel))
         .filter(F.col("_rn") <= n_terms)
         .select(
@@ -1380,7 +1385,7 @@ def common_terms_query(
     has_rare = qt_e.groupBy("qid").agg(
         F.max("is_rare").alias("has_rare")
     )
-    contrib = _per_posting_score(sim, index.stats, qt_e.columns)
+    contrib = _per_posting_score(sim, index.stats)
     matched = (
         index.postings.join(F.broadcast(qt_e), "term")
         .select("qid", "doc_id", contrib.alias("contrib"), "is_rare")
@@ -1665,7 +1670,7 @@ def explain_scores(
     postings = index.postings
     if doc_ids is not None:
         postings = postings.filter(F.col("doc_id").isin(list(doc_ids)))
-    contrib = _per_posting_score(sim, index.stats, qt_enriched.columns)
+    contrib = _per_posting_score(sim, index.stats)
     return postings.join(F.broadcast(qt_enriched), "term").select(
         "qid",
         "doc_id",
@@ -1991,7 +1996,7 @@ def dismax_topk(
     expression. No second index pass, no extra shuffle."""
     sim = sim or Similarity()
     qt_enriched = enrich_query_terms(index, query_terms)
-    contrib = _per_posting_score(sim, index.stats, qt_enriched.columns)
+    contrib = _per_posting_score(sim, index.stats)
     tie = F.lit(float(tie_breaker))
     mx = F.element_at("_cs", -1)
     matched = (
@@ -2143,7 +2148,7 @@ def synonym_topk(
         )
         .withColumn("weight", F.lit(1.0))
     )
-    contrib = _per_posting_score(sim, index.stats, blended.columns)
+    contrib = _per_posting_score(sim, index.stats)
     scored = (
         blended.select("qid", "doc_id", contrib.alias("contrib"))
         .groupBy("qid", "doc_id")

@@ -50,16 +50,22 @@ Query (``score_queries_wand``):
     ``applyInPandas`` block-max kernel (``blockmax_topk_kernel``) with
     a k-heap. The doc-id space is cut into windows on the union of the
     terms' block boundaries (8 boundaries a window). A window's upper
-    bound is the sum, over terms, of the best (max_tf, min_dl) impact
-    among the term's blocks that overlap it; a window whose bound is
-    below the heap floor theta is skipped without decoding a byte.
-    Surviving windows bulk-decode their blocks and are scored with
-    numpy; only candidates at or above theta reach the heap. theta is
-    shard-local (safe: shard-local theta <= global theta, so pruning is
-    only ever conservative). Per-shard top-k then a tiny global per-qid
-    merge. With shards > 1 every query fans out to ``shards``
-    independent kernel tasks — the intra-query parallelism knob at
-    cluster scale.
+    bound folds, over terms, the best (max_tf, min_dl) impact among the
+    term's blocks that overlap it; a window whose bound is below the
+    heap floor theta is skipped without decoding a byte. Surviving
+    windows bulk-decode their blocks and are scored with numpy; only
+    candidates at or above theta reach the heap. theta is shard-local
+    (safe: shard-local theta <= global theta, so pruning is only ever
+    conservative). Per-shard top-k then a tiny global per-qid merge.
+    With shards > 1 every query fans out to ``shards`` independent
+    kernel tasks — the intra-query parallelism knob at cluster scale.
+
+A posting's contribution is ``retrieval.kernel_contrib``, the one
+definition of bm25, lmdir and lmjm that the Spark scorers evaluate too,
+and a doc's score folds its contributions like ``retrieval.score_fold``
+(``fold_by_doc``), so bm25 scores equal ``score_queries``' bit for bit.
+lmdir and lmjm agree to within an ulp of a log: np.log and the JVM's
+StrictMath.log round some values differently.
 
 Tie semantics match the exhaustive path: score desc, doc_id asc; the
 heap orders by (score, -doc_id) and pruning uses strict ub < theta so
@@ -82,16 +88,17 @@ from pyspark.sql import functions as F
 
 from ..functions.codec import (
     BlockDirectory,
-    decode_block,
     decode_block_range,
     encode_posting_list,
 )
 from ..functions.hashing import mix_shard_expr, mix_shard_np
 from .indexer import InvertedIndex
 from .retrieval import (
+    KERNEL_KINDS,
     Similarity,
     _per_posting_score,
     enrich_query_terms,
+    kernel_contrib,
     rank_topk,
     score_fold,
 )
@@ -253,43 +260,18 @@ def build_compressed_postings(
 
 
 def _make_kernel(sim: Similarity, stats):
-    """Per-term scoring closure factory: returns f(row_consts) ->
-    (score(tf, dl), is_monotone) where score works on numpy arrays.
-    All kernels are monotone ↑tf, ↓dl, so (max_tf, min_dl) bounds hold."""
-    if sim.kind == "bm25":
-        def make(idf, weight, cf):
-            c = weight * idf
-            k1b = sim.k1 * (1.0 - sim.b)
-            k1bb = sim.k1 * sim.b / stats.avgdl
+    """Per-term scoring closure factory: make(idf, weight, cf) ->
+    f(tf, dl), ``kernel_contrib`` over numpy arrays. Every kind is
+    monotone ↑tf, ↓dl, so (max_tf, min_dl) bounds hold."""
+    if sim.kind not in KERNEL_KINDS:
+        raise ValueError(f"unknown similarity: {sim.kind}")
 
-            def f(tf, dl):
-                return c * tf / (tf + k1b + k1bb * dl)
+    def make(idf, weight, cf):
+        return lambda tf, dl: kernel_contrib(
+            sim, stats, np, tf, dl, weight, idf, cf
+        )
 
-            return f
-        return make
-    if sim.kind == "lmdir":
-        def make(idf, weight, cf):
-            p_c = cf / stats.total_tokens
-
-            def f(tf, dl):
-                raw = np.log(1.0 + tf / (sim.mu * p_c)) + np.log(
-                    sim.mu / (dl + sim.mu)
-                )
-                return weight * np.maximum(raw, 0.0)
-
-            return f
-        return make
-    if sim.kind == "lmjm":
-        def make(idf, weight, cf):
-            p_c = cf / stats.total_tokens
-            lam_ratio = (1.0 - sim.lam) / sim.lam
-
-            def f(tf, dl):
-                return weight * np.log(1.0 + lam_ratio * (tf / dl) / p_c)
-
-            return f
-        return make
-    raise ValueError(f"unknown similarity: {sim.kind}")
+    return make
 
 
 class _TermList:
@@ -312,13 +294,6 @@ class _TermList:
         )
         self.cache: dict[int, tuple] = {}
 
-    def decode(self, b: int):
-        got = self.cache.get(b)
-        if got is None:
-            got = decode_block(self.buf, self.dirs, b)
-            self.cache[b] = got
-        return got
-
     def decode_range(self, b0: int, b1: int) -> None:
         """Bulk-decode any uncached blocks in [b0, b1) — one varbyte
         pass per contiguous uncached run instead of ~30 small numpy ops
@@ -337,17 +312,38 @@ class _TermList:
                 run_start = None
 
 
+def fold_by_doc(
+    ids: np.ndarray, contribs: np.ndarray
+) -> tuple[np.ndarray, np.ndarray]:
+    """Per-doc scores summed like ``retrieval.score_fold``: each doc's
+    contributions ascending, left to right, from 0.0 -> (doc ids, scores).
+    The loop runs over the per-doc count (at most the query's term
+    count); np.add.reduce/reduceat sum pairwise and round differently."""
+    order = np.lexsort((contribs, ids))
+    ids, contribs = ids[order], contribs[order]
+    starts = np.flatnonzero(np.r_[True, ids[1:] != ids[:-1]])
+    counts = np.diff(np.r_[starts, ids.size])
+    scores = np.zeros(starts.size)
+    for j in range(int(counts.max())):
+        m = counts > j
+        scores[m] += contribs[starts[m] + j]
+    return ids[starts], scores
+
+
 def blockmax_topk_kernel(
     terms: list[_TermList], k: int, blocks_per_window: int = 8
 ) -> list[tuple[int, float]]:
     """Vectorized block-max scorer: the doc-id space is windowed on the
-    union of block boundaries; a window whose summed per-term block
+    union of block boundaries; a window whose folded per-term block
     upper bounds cannot beat the heap floor theta is skipped WITHOUT
     decoding; surviving windows are scored with numpy (decode -> mask ->
-    per-term kernel -> np.add.at accumulate) and only candidates at or
-    above theta touch the Python heap. Identical results to exhaustive
+    per-term kernel -> ``fold_by_doc``) and only candidates at or above
+    theta touch the Python heap. Same top-k and scores as exhaustive
     scoring (ties: score desc, doc_id asc), ~numpy-speed per posting
-    instead of a per-doc Python pivot loop."""
+    instead of a per-doc Python pivot loop. The window bound folds the
+    terms' block maxima like ``fold_by_doc``: every contribution is >= 0
+    and rounded addition is monotone, so the bound is >= any doc's score
+    in the window and pruning on ``bound < theta`` is safe."""
     if not terms:
         return []
     boundaries = np.unique(
@@ -359,24 +355,26 @@ def blockmax_topk_kernel(
     heap: list[tuple[float, int]] = []  # (score, -doc_id) min-heap
     lo = -(1 << 62)
     for hi in his:
-        # per-term overlapping block ranges + UB sum for the window
-        ranges = []
-        ub_sum = 0.0
+        # per-term overlapping block ranges + folded UB for the window
+        ranges, ubs = [], []
         for t in terms:
             b0 = int(np.searchsorted(t.dirs.last_doc, lo, side="right"))
             b1 = int(np.searchsorted(t.lb, hi, side="right"))
             if b1 > b0:
                 ranges.append((t, b0, b1))
-                ub_sum += float(t.ub[b0:b1].max())
+                ubs.append(float(t.ub[b0:b1].max()))
+        ub = 0.0
+        for x in sorted(ubs):
+            ub += x
         theta = heap[0][0] if len(heap) >= k else -math.inf
-        if not ranges or ub_sum < theta:
+        if not ranges or ub < theta:
             lo = hi
             continue
         ids_parts, sc_parts = [], []
         for t, b0, b1 in ranges:
             t.decode_range(b0, b1)  # bulk varbyte pass for the window
             for b in range(b0, b1):
-                ids, tfs, dls = t.decode(b)
+                ids, tfs, dls = t.cache[b]
                 mask = (ids > lo) & (ids <= hi)
                 if mask.any():
                     ids_parts.append(ids[mask])
@@ -389,10 +387,9 @@ def blockmax_topk_kernel(
         lo = hi
         if not ids_parts:
             continue
-        cat_ids = np.concatenate(ids_parts)
-        u, inv = np.unique(cat_ids, return_inverse=True)
-        scores = np.zeros(u.size)
-        np.add.at(scores, inv, np.concatenate(sc_parts))
+        u, scores = fold_by_doc(
+            np.concatenate(ids_parts), np.concatenate(sc_parts)
+        )
         # only candidates that can enter the heap reach Python
         theta = heap[0][0] if len(heap) >= k else -math.inf
         if theta > -math.inf:
@@ -531,9 +528,7 @@ def impact_quantized_topk(
     qte = enrich_query_terms(
         index, query_terms.select("qid", "term").distinct()
     )
-    contrib = _per_posting_score(
-        Similarity(k1=sim.k1, b=sim.b), index.stats, qte.columns
-    )
+    contrib = _per_posting_score(Similarity(k1=sim.k1, b=sim.b), index.stats)
     j = index.postings.join(F.broadcast(qte), "term").select(
         "qid", "term", "doc_id", contrib.alias("c")
     )

@@ -7,6 +7,16 @@ import os
 from pyspark.sql import SparkSession
 
 
+def driver_memory() -> str:
+    """``SPARK_DRIVER_MEM`` when set, else half the host's physical
+    memory in MiB, in [1g, 48g]: 8g measurably spills at 32 threads
+    (BENCH/BASELINE.md), but a fixed 48g cannot map on a smaller host."""
+    if os.environ.get("SPARK_DRIVER_MEM"):
+        return os.environ["SPARK_DRIVER_MEM"]
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1024, min(48 * 1024, phys // 2 // 2**20))}m"
+
+
 def get_spark(
     app_name: str = "luc4ir_spark",
     master: str | None = None,
@@ -42,13 +52,7 @@ def get_spark(
             "false",
         )
         .config("spark.ui.enabled", "false")
-        # 8g execution memory measurably spills/anti-scales at 32 threads
-        # (BENCH/BASELINE.md); the sandbox has 128 GiB — default high,
-        # override with SPARK_DRIVER_MEM when sharing the box
-        .config(
-            "spark.driver.memory",
-            os.environ.get("SPARK_DRIVER_MEM", "48g"),
-        )
+        .config("spark.driver.memory", driver_memory())
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

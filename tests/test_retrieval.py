@@ -3351,6 +3351,28 @@ def test_scores_do_not_depend_on_postings_layout(spark, layouts, name):
     assert a == b
 
 
+@pytest.mark.parametrize("shards", [1, 4])
+def test_wand_scores_equal_score_queries(spark, layouts, shards):
+    """Block-max WAND returns score_queries' BM25 run to the bit, at one
+    and at four salt shards, on docs that match three or more query
+    terms (where an unsorted fold or a second BM25 shape moves scores
+    by an ulp)."""
+    import dataclasses
+
+    from luc4ir_spark.operators import wand as wd
+
+    qt, (body, _title), _ = layouts
+    idx = dataclasses.replace(
+        body,
+        config=dataclasses.replace(body.config, num_salt_shards=shards),
+        blobs=None,
+    )
+    want = sorted(map(tuple, rt.score_queries(idx, qt, k=200).collect()))
+    got = sorted(map(tuple, wd.score_queries_wand(idx, qt, k=200).collect()))
+    assert len(want) > 0
+    assert got == want
+
+
 def test_all_oov_topic_returns_no_rows(spark, layouts):
     from luc4ir_spark.operators import feedback as fb
 
