@@ -673,8 +673,10 @@ def term_max_contrib(
         F.col("tf").cast("double"), F.col("doc_len").cast("double"),
         F.lit(1.0), idf_lucene(F.col("df"), index.stats.n_docs), None,
     )
+    # the dictionary is far smaller than the postings it meets here, so
+    # broadcasting it keeps the postings from being shuffled on term
     rows = index.postings.join(
-        index.term_stats.select("term", "df"), "term"
+        F.broadcast(index.term_stats.select("term", "df")), "term"
     ).select("term", "df", F.struct(contrib.alias("c"), "doc_id").alias("_s"))
     agg = (
         rows.groupBy("term", "df")

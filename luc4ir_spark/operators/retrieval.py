@@ -90,11 +90,11 @@ def _bm25_norm(tf, dl, sim: Similarity, stats):
 
 def kernel_contrib(sim: Similarity, stats, m, tf, dl, weight, idf, cf):
     """One (query-term, posting) contribution under a ``KERNEL_KINDS``
-    similarity. The double operands are Spark Columns or numpy arrays
-    and floats alike, and ``m`` supplies their ``log`` and ``maximum``,
-    so every engine runs the same float64 operations in the same order."""
-    if sim.kind not in KERNEL_KINDS:
-        raise ValueError(f"similarity {sim.kind!r} is not in {KERNEL_KINDS}")
+    similarity (callers pass no other kind; ``wand._make_kernel``
+    rejects one on the driver). The double operands are Spark Columns
+    or numpy arrays and floats alike, and ``m`` supplies their ``log``
+    and ``maximum``, so every engine runs the same float64 operations
+    in the same order."""
     if sim.kind == "bm25":
         return weight * idf * tf / _bm25_norm(tf, dl, sim, stats)
     p_c = cf / float(stats.total_tokens)
@@ -4157,8 +4157,9 @@ def word_break_suggest(
     -> (term, left, right, df_sum, rank), rank <= k.
 
     Plan: |terms| x |term length| split candidates (a literal-sequence
-    explode — query-sized, never corpus-sized), two broadcast joins
-    against the vocab-sized term dictionary, one bounded window."""
+    explode — query-sized, never corpus-sized), broadcast into two
+    joins that stream the vocab-sized term dictionary, one bounded
+    window."""
     if not terms:
         raise ValueError("word_break_suggest: empty terms")
     spark = index.postings.sparkSession
@@ -4179,23 +4180,12 @@ def word_break_suggest(
             F.expr("substr(term, p + 1)").alias("right"),
         )
     )
+    halves = vocab.select(
+        F.col("term").alias("left"), F.col("df").alias("_d1")
+    ).join(F.broadcast(cand), "left")
     j = (
-        cand.join(
-            F.broadcast(
-                vocab.select(
-                    F.col("term").alias("left"), F.col("df").alias("_d1")
-                )
-            ),
-            "left",
-        )
-        .join(
-            F.broadcast(
-                vocab.select(
-                    F.col("term").alias("right"), F.col("df").alias("_d2")
-                )
-            ),
-            "right",
-        )
+        vocab.select(F.col("term").alias("right"), F.col("df").alias("_d2"))
+        .join(F.broadcast(halves), "right")
         .select(
             "term", "p", "left", "right",
             (F.col("_d1") + F.col("_d2")).cast("long").alias("df_sum"),

@@ -3,14 +3,22 @@
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
 
 
-def driver_memory() -> str:
-    """``SPARK_DRIVER_MEM`` when set, else half the host's physical
-    memory in MiB, in [1g, 48g]: 8g measurably spills at 32 threads
-    (BENCH/BASELINE.md), but a fixed 48g cannot map on a smaller host."""
+def driver_memory(extra_conf: dict | None = None) -> str:
+    """The driver's maximum heap. A ``-Xms`` pinned in ``extra_conf``'s
+    ``spark.driver.extraJavaOptions`` sets it, so the JVM never starts
+    with its initial heap above its maximum; else ``SPARK_DRIVER_MEM``
+    when set; else half the host's physical memory in MiB, in [1g, 48g]:
+    8g measurably spills at 32 threads (BENCH/BASELINE.md), but a fixed
+    48g cannot map on a smaller host."""
+    opts = (extra_conf or {}).get("spark.driver.extraJavaOptions", "")
+    pinned = re.findall(r"(?:^|\s)-Xms(\S+)", opts)
+    if pinned:
+        return pinned[-1]  # the JVM honours the last -Xms
     if os.environ.get("SPARK_DRIVER_MEM"):
         return os.environ["SPARK_DRIVER_MEM"]
     phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
@@ -52,7 +60,7 @@ def get_spark(
             "false",
         )
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", driver_memory())
+        .config("spark.driver.memory", driver_memory(extra_conf))
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -26,7 +26,7 @@ from luc4ir_spark.operators import dedup as dd
 from luc4ir_spark.operators import indexer as ix
 from luc4ir_spark.operators import retrieval as rt
 from luc4ir_spark.operators import wand as wd
-from luc4ir_spark.session import get_spark
+from luc4ir_spark.session import driver_memory, get_spark
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -50,7 +50,7 @@ def noop(df):
 
 def main():
     which = set(sys.argv[1:]) or {"minhash", "phrase"}
-    mem = os.environ.get("SPARK_DRIVER_MEM", "48g")
+    mem = driver_memory()
     spark = get_spark(
         app_name="bench_extra",
         master=f"local[{CPUS}]",

@@ -161,7 +161,7 @@ def run_child(
     from luc4ir_spark.functions.analysis import AnalyzerConfig
     from luc4ir_spark.operators import indexer as ix
     from luc4ir_spark.operators import retrieval as rt
-    from luc4ir_spark.session import get_spark
+    from luc4ir_spark.session import driver_memory, get_spark
     from luc4ir_spark.sources.corpus import HIGH_DF_TOKENS, synth_corpus
 
     # IDENTICAL job shape at both parallelism levels: same input
@@ -178,7 +178,7 @@ def run_child(
             # pin + pre-touch the heap: G1 heap-growth dynamics caused
             # 2-3x run-to-run variance on identical 32-thread builds
             "spark.driver.extraJavaOptions": (
-                f"-Xms{os.environ.get('SPARK_DRIVER_MEM', '48g')}"
+                f"-Xms{driver_memory()}"
                 " -XX:+AlwaysPreTouch"
             ),
             # stage-metric capture for --profile attribution

@@ -120,7 +120,7 @@ def main() -> None:
     from luc4ir_spark.operators import indexer as ix
     from luc4ir_spark.operators import retrieval as rt
     from luc4ir_spark.operators import wand as wd
-    from luc4ir_spark.session import get_spark
+    from luc4ir_spark.session import driver_memory, get_spark
     from luc4ir_spark.sources.corpus import (
         HIGH_DF_TOKENS,
         build_vocab,
@@ -128,7 +128,7 @@ def main() -> None:
     )
 
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    mem = os.environ.get("SPARK_DRIVER_MEM", "48g")
+    mem = driver_memory()
     spark = get_spark(
         app_name="wand_disk_bench",
         master=f"local[{cpus}]",

@@ -685,10 +685,26 @@ def test_one_rank_window_one_fold_one_query_side():
     ``collapse_results`` (which ranks per collapse key first and carries
     the key) write a per-qid window ordered by score desc. (2) The
     sorted score fold, array_sort over a collect_list of values,
-    appears once. (3) Nothing broadcasts the term dictionary, on the
-    query side or elsewhere: it is vocab-sized, so it is the streamed
-    side of ``enrich_query_terms``' join and joins unhinted (AQE
-    broadcasts it only while it is small) everywhere else."""
+    appears once. (3) The term dictionary, or a name bound to a
+    projection or filter of it, is broadcast only where the other side
+    is the postings relation itself or pairs drawn from it
+    (``corpus_side``), which it is smaller than. It is vocab-sized, so
+    it is the streamed side of ``enrich_query_terms``' join and joins
+    unhinted (AQE broadcasts it only while it is small) everywhere
+    else."""
+    corpus_side = (
+        "term_max_contrib", "term_cooccurrence_pmi", "term_range_query"
+    )
+
+    def names(node):
+        return {n.id for n in ast.walk(node) if isinstance(n, ast.Name)}
+
+    def is_dictionary(node, aliases):
+        # a join result is sized by its other side, not by the dictionary
+        src = ast.unparse(node)
+        return ".join(" not in src and (
+            re.search(r"\bterm_stats\b", src) or names(node) & aliases
+        )
 
     def is_score_desc(arg):
         return (
@@ -727,13 +743,24 @@ def test_one_rank_window_one_fold_one_query_side():
     for path in sorted(pkg.rglob("*.py")):
         rel, tree = path.relative_to(pkg), ast.parse(path.read_text())
         folds += [f"{rel}:{n.lineno}" for n in ast.walk(tree) if is_fold(n)]
-        broadcasts += [
-            f"{rel}:{n.lineno}" for n in ast.walk(tree)
-            if isinstance(n, ast.Call)
-            and ast.unparse(n.func) == "F.broadcast"
-            and "term_stats" in ast.unparse(n)
-        ]
         for top in tree.body:
+            aliases = set()
+            assigns = sorted(
+                (n for n in ast.walk(top) if isinstance(n, ast.Assign)),
+                key=lambda n: n.lineno,
+            )
+            for a in assigns:
+                if is_dictionary(a.value, aliases):
+                    for t in a.targets:
+                        aliases |= names(t)
+            name = getattr(top, "name", "")
+            broadcasts += [
+                f"{rel}:{n.lineno} {name}" for n in ast.walk(top)
+                if isinstance(n, ast.Call)
+                and ast.unparse(n.func) == "F.broadcast"
+                and is_dictionary(n.args[0], aliases)
+                and name not in corpus_side
+            ]
             if not isinstance(top, (ast.FunctionDef, ast.ClassDef)):
                 continue
             for node in ast.walk(top):
@@ -748,4 +775,4 @@ def test_one_rank_window_one_fold_one_query_side():
                     windows.append(where)
     assert windows == []
     assert len(folds) == 1, folds
-    assert broadcasts == []
+    assert broadcasts == [], broadcasts

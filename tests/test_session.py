@@ -31,3 +31,51 @@ def test_driver_memory_env_wins(monkeypatch):
     _host(monkeypatch, 15 * 2**30)
     monkeypatch.setenv("SPARK_DRIVER_MEM", "3g")
     assert session.driver_memory() == "3g"
+
+
+def test_driver_memory_follows_pinned_xms(monkeypatch):
+    _host(monkeypatch, 15 * 2**30)
+    monkeypatch.setenv("SPARK_DRIVER_MEM", "3g")
+    opts = {"spark.driver.extraJavaOptions": "-Xms48g -XX:+AlwaysPreTouch"}
+    assert session.driver_memory(opts) == "48g"
+
+
+class _Builder:
+    """Records what get_spark configures; starts no JVM."""
+
+    def __init__(self):
+        self.conf = {}
+
+    def master(self, _):
+        return self
+
+    def appName(self, _):
+        return self
+
+    def config(self, k, v):
+        self.conf[k] = v
+        return self
+
+    def getOrCreate(self):
+        return self
+
+
+def test_get_spark_heap_never_below_pinned_xms(monkeypatch):
+    """bench.py pins ``-Xms`` (48g unless SPARK_DRIVER_MEM is set) and
+    leaves ``spark.driver.memory`` to get_spark: on a host whose derived
+    default is smaller, -Xmx must still equal that -Xms, or the JVM
+    refuses to start."""
+    _host(monkeypatch, 64 * 2**30)
+    builder = _Builder()
+    fake = type("S", (), {"builder": builder})
+    monkeypatch.setattr(session, "SparkSession", fake)
+    monkeypatch.setattr(
+        _Builder, "sparkContext",
+        type("C", (), {"setLogLevel": lambda self, _: None})(),
+        raising=False,
+    )
+    opts = "-Xms48g -XX:+AlwaysPreTouch"
+    session.get_spark(extra_conf={"spark.driver.extraJavaOptions": opts})
+    assert builder.conf["spark.driver.memory"] == "48g"
+    session.get_spark()
+    assert builder.conf["spark.driver.memory"] == f"{32 * 1024}m"
